@@ -20,35 +20,17 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from presto_spark.queries import REGISTRY  # noqa: E402
+from presto_spark.session import ENGINE_CONF, tune_for_input  # noqa: E402
 
 
 def _configure(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
-    """Apply engine session settings to a driver-provided session.
-
-    Mirrors every runtime-settable *semantic* conf that the engine's own
-    ``presto_spark.session.get_spark`` pins at build time, so a driver
-    session executes under the same cast/overflow/NULL semantics the
-    engine was validated under.  Spark 4 defaults ANSI mode ON, which
-    turns element_at/cast overflows into throws — Presto semantics (and
-    this engine) are non-ANSI (session.py rationale block).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # Arrow batch sizing (session.py rationale): batch-local partial
-    # operators (quantile coresets, partial hulls) compose exactly under
-    # ANY batching, but mirroring the engine's batch size keeps a driver
-    # session's sketch envelopes on the exact values the engine was
-    # validated with.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
+    """Apply the engine's semantic confs (``presto_spark.session.ENGINE_CONF``)
+    to a driver-provided session, so it executes under the same
+    cast/overflow/NULL semantics the engine was validated under, then
+    size shuffle partitions to the input when ``sf_dir`` is given."""
+    for k, v in ENGINE_CONF.items():
+        spark.conf.set(k, v)
     if sf_dir is not None:
-        from presto_spark.session import tune_for_input
-
         tune_for_input(spark, sf_dir)
     return spark
 

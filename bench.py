@@ -62,6 +62,36 @@ def _prior_bench() -> dict[str, float]:
         return {}
 
 
+def isolate(spark) -> None:
+    """Per-query isolation (VERDICT r2 #3): drop cached plans and any
+    persisted/checkpoint blocks a query left behind, so query N
+    cannot poison query N+1's timing."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
+def measure_runs(spark, name: str, sf_dir: str) -> list[float]:
+    """Wall seconds of three measured runs of registry row ``name``.
+
+    Prewarm THIS query (codegen, JIT, parquet footers, broadcast
+    builds), then isolate before each measured run and once after —
+    per-query prewarm per the reference protocol (tpch.yaml:3-6).
+    Callers report the median (VERDICT r5 #7): single-shot timings
+    showed ±40% scheduler jitter round-over-round; the median makes
+    BENCH_rN.json comparable across rounds.
+    """
+    REGISTRY[name].spark(spark, sf_dir).collect()
+    runs: list[float] = []
+    for _ in range(3):
+        isolate(spark)
+        t0 = time.time()
+        REGISTRY[name].spark(spark, sf_dir).collect()
+        runs.append(time.time() - t0)
+    isolate(spark)
+    return runs
+
+
 def _confirm_flags(
     flagged: list[str],
     prior: dict[str, float],
@@ -102,34 +132,12 @@ def main() -> None:
 
     names = [n for n, q in REGISTRY.items() if "bench" in q.tags]
 
-    def _isolate() -> None:
-        """Per-query isolation (VERDICT r2 #3): drop cached plans and any
-        persisted/checkpoint blocks a query left behind, so query N
-        cannot poison query N+1's timing."""
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
     # Session warmup: one cheap action so the first measured query does
     # not absorb executor/Arrow/first-job startup cost.
     spark.range(1).collect()
 
     def _measure(name: str) -> float:
-        # Prewarm THIS query (codegen, JIT, parquet footers, broadcast
-        # builds), isolate, then measure it immediately — per-query
-        # prewarm per the reference protocol (tpch.yaml:3-6).
-        # Median of 3 measured runs (VERDICT r5 #7): single-shot
-        # timings showed ±40% scheduler jitter round-over-round; the
-        # median makes BENCH_rN.json comparable across rounds.
-        REGISTRY[name].spark(spark, sf_dir).collect()
-        runs: list[float] = []
-        for _ in range(3):
-            _isolate()
-            t0 = time.time()
-            REGISTRY[name].spark(spark, sf_dir).collect()
-            runs.append(time.time() - t0)
-        _isolate()
-        return round(sorted(runs)[1], 3)
+        return round(sorted(measure_runs(spark, name, sf_dir))[1], 3)
 
     timings: dict[str, float] = {}
     load_per_query: dict[str, float] = {}

@@ -12,9 +12,9 @@ and evaluates JVM-side, no Python workers.
 Values are unchanged: rows are held in an object-dtype frame so pandas
 cannot coerce them (ints with None stay ints, not float64) and the
 explicit schema drives the Arrow cast, exactly as the classic path's
-type binder does.  Any input the Arrow path rejects — and the
-empty-rows edge, where a columnless pandas frame cannot bind a schema —
-falls back to the original ``createDataFrame(list)`` code path.
+type binder does.  Only the empty-rows edge, where a columnless pandas
+frame cannot bind a schema, takes the original ``createDataFrame(list)``
+code path.
 """
 
 from __future__ import annotations
@@ -23,14 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """rows (list of tuples) + DDL schema string → DataFrame, preferring
-    the Arrow batch path over the pickled-RDD path."""
-    if rows:
-        try:
-            import pandas as pd
+    """rows (list of tuples) + DDL schema string → DataFrame through the
+    Arrow batch path instead of the pickled-RDD path."""
+    if not rows:
+        return spark.createDataFrame(rows, schema)
+    import pandas as pd
 
-            return spark.createDataFrame(
-                pd.DataFrame(rows, dtype=object), schema)
-        except Exception:
-            pass
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)

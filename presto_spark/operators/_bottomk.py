@@ -11,21 +11,12 @@ at 100 TB even though it is correct and fast at test scale
 Bottom-k by a total order is associative, so it distributes in two
 bounded stages with identical results:
 
-1. each input partition selects its own k-smallest per group locally —
-   at most ``num_partitions × k`` rows per group survive;
-2. final rank over the survivors with the original per-group window —
-   now priced in k × partitions, not data size.
-
-r15 optimization round (guide §2.4 — remove shuffles outright): stage 1
-used to be a window keyed on ``(group, spark_partition_id())``, which
-still paid a full Exchange of the RAW rows before the partition-local
-rank.  It is now a batch-local ``mapInPandas`` pass (the partial-hull
-pattern from geo_agg.py): raw rows never cross an exchange at all; only
-the bounded survivors feed the final window.  Any partial grouping
-composes exactly — bottom-k of bottom-ks over any cover of the input is
-the global bottom-k — so batch boundaries (like the old partition
-boundaries, which already varied with partitioning) cannot change the
-result.
+1. a window keyed on ``(group, spark_partition_id())`` keeps each input
+   partition's k-smallest per group — no window key ever spans more
+   than one input partition's share of a group;
+2. the final per-group window ranks only the survivors, at most
+   ``partitions × k`` rows per group — priced in k × partitions, not
+   data size.
 
 This is the same partial-then-final shape the repo already uses for
 quantile sketches (qsketch.py two-level shard build) and geometry
@@ -36,56 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-# Inputs whose optimizer-estimated size is at or below this take the
-# JVM two-window form; larger inputs take the batch-local Arrow pass.
-# Rationale (r16, VERDICT r15 what's-wrong #1): the driver measured the
-# unconditional batch-local pass at ~2x the r14 two-window numbers on
-# both sketch flagship rows — at bench scale the Arrow round-trip of
-# every raw row costs more than the in-memory shuffle it removes.  The
-# trade only reverses when the stage-1 exchange is a real network+disk
-# shuffle, i.e. when the input is far bigger than one machine's memory.
-# The threshold is parameterised (spark.presto_spark.bottomk.localBytes)
-# with a deliberately large default: the two-window form distributes
-# fine (its stage-1 window is keyed per partition) and only the
-# terabyte regime plausibly pays for the Python boundary.
-LOCAL_INPUT_BYTES = 32 * 1024 ** 3
-_LOCAL_BYTES_CONF = "spark.presto_spark.bottomk.localBytes"
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate for the operator input — driver-side
-    plan statistics, no job.  Unknown/failed estimates return the
-    scale-safe answer (huge), routing to the batch-local pass."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
-
-
-def _bottom_k_rank_two_window(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list,
-    limit,
-    rank_col: str = "__rk",
-) -> DataFrame:
-    """Original (r6–r14) form: stage 1 as a (group, partition-id)
-    window.  Kept as the parity reference for the batch-local rewrite
-    (pinned by test_bottom_k_rank_batch_local_matches_window)."""
-    lim = limit if isinstance(limit, Column) else F.lit(limit)
-    staged = df.withColumn("__bk_pid", F.spark_partition_id())
-    w_part = Window.partitionBy(*group_cols, "__bk_pid").orderBy(*order_cols)
-    survivors = (
-        staged.withColumn("__bk_rk", F.row_number().over(w_part))
-        .filter(F.col("__bk_rk") <= lim)
-        .drop("__bk_pid", "__bk_rk")
-    )
-    w_final = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return survivors.withColumn(rank_col, F.row_number().over(w_final)).filter(
-        F.col(rank_col) <= lim
-    )
 
 
 def bottom_k_rank(
@@ -101,118 +42,21 @@ def bottom_k_rank(
 
     ``limit`` is an int or a Column (for per-group limits such as a
     merged sketch's smallest k; it must be constant within each group).
-    Equivalent to the naive single window filter, but raw rows never
-    cross an exchange: stage 1 keeps each Arrow batch's k-smallest per
-    group locally, and only those bounded survivors shuffle into the
-    final per-group window.
-
-    Ordering + round-trip contract (what every caller satisfies): plain
-    ascending order columns, non-NULL — the keys are md5/xxhash-derived
-    longs or null-filtered values.  Frames carrying FLOAT/DOUBLE columns
-    take the original two-window form instead: the pandas↔Arrow
-    round-trip cannot distinguish NaN from NULL (a NaN value would come
-    back NULL, and NaN's Spark sort position — greater than everything —
-    is not pandas' NA position), so the batch-local stage is gated to
-    the NaN-free-by-construction schemas the sketch/sample operators
-    actually pass (longs, strings, decimals, dates).
+    Result-identical to the naive single window filter
+    ``row_number().over(Window.partitionBy(*group_cols)
+    .orderBy(*order_cols)) <= limit`` whenever the order is total; it
+    scales because stage 1's window is keyed per input partition and
+    the final window sees at most ``partitions × k`` rows per group.
     """
-    # Size gate (r16, VERDICT r15 next-round #3 — the BPE/CC pattern):
-    # both forms are result-identical (pinned by test_bottomk.py), so
-    # routing on an estimate can never change output.  Small inputs —
-    # the entire bench regime — keep the r14 JVM two-window form; the
-    # batch-local Arrow pass is reserved for inputs where stage 1's
-    # exchange would be a real network shuffle.
-    try:
-        local_bytes = int(df.sparkSession.conf.get(
-            _LOCAL_BYTES_CONF, str(LOCAL_INPUT_BYTES)))
-    except Exception:
-        local_bytes = LOCAL_INPUT_BYTES
-    if _estimated_bytes(df) <= local_bytes:
-        return _bottom_k_rank_two_window(
-            df, group_cols, order_cols, limit, rank_col)
-    return _bottom_k_rank_batch_local(
-        df, group_cols, order_cols, limit, rank_col)
-
-
-def _bottom_k_rank_batch_local(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list,
-    limit,
-    rank_col: str = "__rk",
-) -> DataFrame:
-    """The r15 batch-local form: stage 1 keeps each Arrow batch's
-    k-smallest per group in a ``mapInPandas`` pass, so raw rows never
-    cross an exchange; only the bounded survivors feed the final
-    per-group window.  Float/double frames still fall back to the
-    two-window form (NaN↔NULL Arrow trap, see ``bottom_k_rank``)."""
     lim = limit if isinstance(limit, Column) else F.lit(limit)
-    d = df
-    # Materialize order expressions and the limit as real columns so the
-    # pandas stage sorts the exact values the final window ranks by.
-    ocols = []
-    for i, oc in enumerate(order_cols):
-        name = f"__bk_o{i}"
-        d = d.withColumn(name, oc if isinstance(oc, Column) else F.col(oc))
-        ocols.append(name)
-    d = d.withColumn("__bk_lim", lim.cast("long"))
-    schema = d.schema
-    if any(f.dataType.typeName() in ("float", "double") for f in schema.fields):
-        return _bottom_k_rank_two_window(
-            df, group_cols, order_cols, limit, rank_col)
-    gcols = list(group_cols)
-
-    long_cols = [f.name for f in schema.fields
-                 if f.dataType.typeName() in ("long", "integer")]
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        acc = None
-        for pdf in batches:
-            # Contract guard (ADVICE r15): a NULL in a long column makes
-            # the Arrow→pandas round trip coerce the whole column to
-            # float64, silently corrupting values above 2^53 (e.g.
-            # xxhash64-derived keys).  Callers promise non-NULL inputs;
-            # enforce it instead of corrupting.
-            for c in long_cols:
-                if pdf[c].dtype.kind == "f":
-                    raise ValueError(
-                        f"bottom_k_rank: integer column {c!r} arrived "
-                        "as float64 in the batch-local stage — it "
-                        "contains NULLs, which violate the operator's "
-                        "non-NULL contract (values above 2^53 would be "
-                        "silently corrupted).  Null-filter the input "
-                        "or use the two-window form.")
-            cur = (pd.concat([acc, pdf], ignore_index=True)
-                   if acc is not None else pdf)
-            cur = cur.sort_values(ocols, kind="mergesort",
-                                  na_position="first")
-            if gcols:
-                pos = cur.groupby(gcols, sort=False, dropna=False).cumcount()
-            else:  # global bottom-k: one implicit group
-                pos = pd.Series(np.arange(len(cur)), index=cur.index)
-            acc = cur[pos < cur["__bk_lim"]][list(schema.names)]
-        if acc is not None and len(acc):
-            yield acc
-
-    survivors = d.mapInPandas(run, schema=schema)
-    w_final = Window.partitionBy(*gcols).orderBy(*[F.col(c) for c in ocols])
-    ranked = (
-        survivors.withColumn(rank_col, F.row_number().over(w_final))
-        .filter(F.col(rank_col) <= F.col("__bk_lim"))
-        .drop("__bk_lim", *ocols)
+    staged = df.withColumn("__bk_pid", F.spark_partition_id())
+    w_part = Window.partitionBy(*group_cols, "__bk_pid").orderBy(*order_cols)
+    survivors = (
+        staged.withColumn("__bk_rk", F.row_number().over(w_part))
+        .filter(F.col("__bk_rk") <= lim)
+        .drop("__bk_pid", "__bk_rk")
     )
-    # Claim barrier: without it, the window exchange's HashPartitioning
-    # claim propagates out of this operator (through aggregates,
-    # broadcast-join stream sides and unions), letting a downstream
-    # SortMergeJoin elide its exchanges and zip stages with unequal
-    # AQE-coalesced partition counts ("Can't zip RDDs with unequal
-    # numbers of partitions" — reproduced in the setdigest merge path).
-    # coalesce with an unreachable cap is a NARROW no-op that resets
-    # the claim to UnknownPartitioning: no data moves, the partition
-    # count and parallelism stay whatever the window stage had, and
-    # every consumer plans its own exchanges from scratch (sketch-sized
-    # input, so those are cheap).
-    return ranked.coalesce(1 << 30)
+    w_final = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    return survivors.withColumn(rank_col, F.row_number().over(w_final)).filter(
+        F.col(rank_col) <= lim
+    )

@@ -553,11 +553,13 @@ def geo_aggregate_hulls(spark, sf_dir):
     # hash-aggregate collapses rows map-side before the exchange (guide
     # §2.3 — the query knows the multiplicity is irrelevant, the
     # optimizer cannot), and the dedup's own shuffle replaces the old
-    # repartition(32) as both the work-spread for the Python/interpreted
-    # passes and the optimizer barrier the geo operators want.  At sf0.1
-    # this cuts the hull mapInPandas input and the exploded point×edge
-    # containment arithmetic ~16x; at real scale the exchange carries
-    # distinct lattice points instead of one row per customer.
+    # repartition(32) as the optimizer barrier the geo operators want.
+    # The measured win is the input reduction: at sf0.1 this cuts the
+    # hull mapInPandas input and the exploded point×edge containment
+    # arithmetic ~16x.  (The dedup exchange is AQE-coalescible, so it
+    # does not promise the old fixed 32-task spread.)  At real scale the
+    # exchange carries distinct lattice points instead of one row per
+    # customer.
     gdf = pts.dropDuplicates(["g", "x", "y"]).select(
         "g", "x", "y", geo.st_point(F.col("x"), F.col("y")).alias("geom"))
     hulls = geo_agg.convex_hull_agg(gdf, ["g"], "geom")

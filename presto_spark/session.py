@@ -32,6 +32,44 @@ from pyspark.sql import SparkSession
 # local[...] parallelism: the driver exports SPARK_GRAFT_CPUS for bench.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
+# Runtime-settable semantic confs: what a query means, and the Arrow
+# batch shape its sketch envelopes were validated under.  ``get_spark``
+# builds with them and ``__spark_entry__._configure`` re-applies them to
+# a driver-provided session, so both execute under the same semantics.
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.session.timeZone": "UTC",
+    # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
+    # timestamp, so read as BIGINT nanos and convert in the catalog
+    # layer (sources/catalog.py) — DuckDB-truncation-compatible.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.adaptive.enabled": "true",
+    # Presto map_concat/map_from_entries are last-wins on duplicate
+    # keys (MapConcatFunction.java); Spark's default is EXCEPTION.
+    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # Spark 4 defaults ANSI ON, which turns element_at/cast overflows
+    # into throws; this engine is validated non-ANSI (module docstring).
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Python-boundary batch sizing (guide §4.2): the 10k-row default
+    # cuts the narrow rows our Arrow stages carry (sketch points,
+    # shingle/minhash ids, lattice coords) into ~0.25 MB batches, so
+    # per-batch overhead dominates any stage whose tasks see more
+    # than 10k rows.  Size batches by BYTES instead: raise the
+    # record cap and let Spark 4's byte cap bound the wide-row
+    # stages (documents, multimodal binary payloads) at 64 MB.
+    # Neither knob reads the core count.  Counterbalanced A/B at
+    # sf0.1: the quantile-sketch level-1 (600k rows/task, the one
+    # bench stage that actually exceeds the old cap) -15%,
+    # reproduced in three load windows; the 5k-row document stages
+    # are one batch per task either way and measure neutral
+    # (OPTIMIZATION_r16.md third session).  Batch-local partial
+    # operators (quantile coresets, partial hulls) compose exactly
+    # under any batching; one batch size keeps sketch envelopes on
+    # the exact values the engine was validated with.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "100000",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
+}
+
 
 def get_spark(
     app_name: str = "presto_spark",
@@ -55,39 +93,12 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
-        # timestamp, so read as BIGINT nanos and convert in the catalog
-        # layer (sources/catalog.py) — DuckDB-truncation-compatible.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        # Presto map_concat/map_from_entries are last-wins on duplicate
-        # keys (MapConcatFunction.java); Spark's default is EXCEPTION.
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python-boundary batch sizing (guide §4.2): the 10k-row default
-        # cuts the narrow rows our Arrow stages carry (sketch points,
-        # shingle/minhash ids, lattice coords) into ~0.25 MB batches, so
-        # per-batch overhead dominates any stage whose tasks see more
-        # than 10k rows.  Size batches by BYTES instead: raise the
-        # record cap and let Spark 4's byte cap bound the wide-row
-        # stages (documents, multimodal binary payloads) at 64 MB.
-        # Neither knob reads the core count.  Counterbalanced A/B at
-        # sf0.1: the quantile-sketch level-1 (600k rows/task, the one
-        # bench stage that actually exceeds the old cap) -15%,
-        # reproduced in three load windows; the 5k-row document stages
-        # are one batch per task either way and measure neutral
-        # (OPTIMIZATION_r16.md third session).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                str(64 * 1024 * 1024))
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
@@ -95,7 +106,7 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffledHashJoinFactor", "3")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

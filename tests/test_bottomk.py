@@ -1,44 +1,47 @@
-"""Parity + gate pins for bottom_k_rank.
+"""Parity pins for bottom_k_rank against the true reference: the naive
+single window ``row_number().over(Window.partitionBy(*g).orderBy(*o))
+<= limit``.
 
-r15 added a batch-local mapInPandas stage 1 (raw rows never cross an
-exchange); r16 size-gated it (VERDICT r15 next-round #3): the driver
-measured the unconditional batch-local pass at ~2x the two-window
-numbers on both sketch flagship rows at bench scale, so small inputs
-(by optimizer size estimate) now take the original r14 JVM two-window
-form and only genuinely large inputs pay the Python boundary.
-
-The batch-local form must stay IDENTICAL to the two-window form: same
-rows, same ranks, including the per-group Column limit, the global (no
-group cols) shape, and Spark's NaN-greatest float ordering that pandas
-does not share natively — the gate can then never change results, only
-plan shape.
+The two-level form must select the same rows with the same ranks for
+every shape its callers use — a per-group Column limit, the global (no
+group cols) shape, Spark's NaN-greatest float ordering and NULL keys
+sorting first ascending — on inputs spread over several partitions, so
+stage 1's per-partition window actually cuts groups.  Every order here
+is total (a unique tiebreaker column), so the expected rows are exact.
 """
 
 import math
 
-import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from presto_spark.operators._bottomk import (
-    _LOCAL_BYTES_CONF,
-    _bottom_k_rank_batch_local,
-    _bottom_k_rank_two_window,
-    bottom_k_rank,
-)
+from presto_spark.operators._bottomk import bottom_k_rank
 
 
-def _collected(df, keys):
+def _collected(df):
     # repr-compare: NaN != NaN would fail tuple equality on identical rows
     return sorted([tuple(repr(x) for x in r) for r in df.collect()])
 
 
-def test_bottom_k_rank_batch_local_matches_window(spark):
+def _naive(df, group_cols, order_cols, limit, rank_col="__rk"):
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= limit)
+
+
+def _assert_matches_naive(df, group_cols, order_cols, limit):
+    got = bottom_k_rank(df, group_cols, order_cols, limit)
+    want = _naive(df, group_cols, order_cols, limit)
+    assert _collected(got) == _collected(want)
+    return got
+
+
+def test_bottom_k_rank_matches_single_window(spark):
     rows = [(g, i, (i * 7919 + ord(g) * 104729) % 1000003)
             for g in ("a", "b", "c") for i in range(500)]
     df = spark.createDataFrame(rows, "g string, i long, h long").repartition(7)
-    want = _bottom_k_rank_two_window(df, ["g"], ["h"], 17)
-    got = _bottom_k_rank_batch_local(df, ["g"], ["h"], 17)
-    assert _collected(got, ["g", "h"]) == _collected(want, ["g", "h"])
+    got = _assert_matches_naive(df, ["g"], ["h"], 17)
+    assert got.count() == 3 * 17
 
 
 def test_bottom_k_rank_column_limit(spark):
@@ -46,78 +49,53 @@ def test_bottom_k_rank_column_limit(spark):
             for g in (1, 2, 3) for i in range(300)]
     df = spark.createDataFrame(
         rows, "g long, i long, h long, k long").repartition(5)
-    want = _bottom_k_rank_two_window(df, ["g"], ["h"], F.col("k"))
-    got = _bottom_k_rank_batch_local(df, ["g"], ["h"], F.col("k"))
-    assert _collected(got, ["g", "h"]) == _collected(want, ["g", "h"])
+    got = _assert_matches_naive(df, ["g"], ["h"], F.col("k"))
+    assert got.count() == 4 + 5 + 6
 
 
 def test_bottom_k_rank_global_no_groups(spark):
     rows = [(i, (i * 7919) % 1000003) for i in range(1000)]
     df = spark.createDataFrame(rows, "i long, h long").repartition(6)
-    want = _bottom_k_rank_two_window(df, [], ["h"], 25)
-    got = _bottom_k_rank_batch_local(df, [], ["h"], 25)
-    assert _collected(got, ["h"]) == _collected(want, ["h"])
+    got = _assert_matches_naive(df, [], ["h"], 25)
+    assert got.count() == 25
 
 
 def test_bottom_k_rank_float_nan_orders_like_spark(spark):
-    # Float frames take the two-window fallback even inside the
-    # batch-local form (the Arrow round-trip would turn NaN into NULL
-    # and pandas' NA position is not Spark's NaN-greatest), so NaN must
-    # still sort GREATER than every value: with limit smaller than the
-    # non-NaN count no NaN row survives, and with a larger limit NaN
-    # rows rank last.
+    # NaN sorts GREATER than every value in Spark: with a limit smaller
+    # than the non-NaN count no NaN row survives, and with a larger
+    # limit NaN rows rank last.
     rows = ([("g", i, float(i)) for i in range(20)]
             + [("g", 100 + i, math.nan) for i in range(5)])
     df = spark.createDataFrame(rows, "g string, i long, v double").repartition(4)
-    want = _bottom_k_rank_two_window(df, ["g"], [F.col("v"), F.col("i")], 22)
-    got = _bottom_k_rank_batch_local(df, ["g"], [F.col("v"), F.col("i")], 22)
-    assert _collected(got, ["v", "i"]) == _collected(want, ["v", "i"])
-    small = _bottom_k_rank_batch_local(df, ["g"], [F.col("v"), F.col("i")], 10)
+    order = [F.col("v"), F.col("i")]
+    got = _assert_matches_naive(df, ["g"], order, 22)
+    assert sum(math.isnan(r.v) for r in got.collect()) == 2
+    small = _assert_matches_naive(df, ["g"], order, 10)
     assert all(not math.isnan(r.v) for r in small.collect())
+
+
+def test_bottom_k_rank_null_keys_sort_first(spark):
+    # Ascending order puts NULL keys first (Spark's default NULLS
+    # FIRST), so every NULL-keyed row outranks every valued one.
+    rows = [("g", i, None if i % 9 == 0 else (i * 7919) % 1000003)
+            for i in range(90)]
+    df = spark.createDataFrame(rows, "g string, i long, h long").repartition(5)
+    got = _assert_matches_naive(df, ["g"], [F.col("h"), F.col("i")], 12)
+    assert sum(r.h is None for r in got.collect()) == 10
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_bottom_k_rank_size_gate_small_input_stays_jvm(spark):
-    """VERDICT r15 next-round #3: at bench scale the public entry point
-    must produce the pure-JVM two-window plan — no Python node.  The
-    input is parquet-backed like every real caller's (createDataFrame
-    inputs have no size estimate and deliberately route scale-safe to
-    the batch-local form)."""
+def test_bottom_k_rank_parquet_plan_stays_jvm(spark):
+    """A parquet-backed input, like every real caller's, yields a
+    pure-JVM plan — no Python node — with the naive window's rows."""
     from tests.conftest import SF_DIR
 
     df = (spark.read.parquet(f"{SF_DIR}/orders.parquet")
           .select("o_orderstatus",
                   F.xxhash64("o_orderkey").alias("h")))
-    got = bottom_k_rank(df, ["o_orderstatus"], ["h"], 9)
-    assert "MapInPandas" not in _plan(got)
-    want = _bottom_k_rank_two_window(df, ["o_orderstatus"], ["h"], 9)
-    assert (_collected(got, ["o_orderstatus", "h"])
-            == _collected(want, ["o_orderstatus", "h"]))
-
-
-def test_bottom_k_rank_size_gate_conf_routes_to_batch_local(spark):
-    """Forcing the threshold to 0 routes through the batch-local stage
-    (the path a >threshold input takes at scale), with identical rows."""
-    rows = [("g", i, (i * 7919) % 1000003) for i in range(200)]
-    df = spark.createDataFrame(rows, "g string, i long, h long")
-    spark.conf.set(_LOCAL_BYTES_CONF, "0")
-    try:
-        got = bottom_k_rank(df, ["g"], ["h"], 9)
-        assert "MapInPandas" in _plan(got)
-        want = _bottom_k_rank_two_window(df, ["g"], ["h"], 9)
-        assert _collected(got, ["g", "h"]) == _collected(want, ["g", "h"])
-    finally:
-        spark.conf.unset(_LOCAL_BYTES_CONF)
-
-
-def test_bottom_k_rank_batch_local_rejects_null_longs(spark):
-    """ADVICE r15: a NULL in a long column would silently coerce the
-    whole column to float64 across Arrow->pandas (corrupting values
-    above 2^53); the batch-local stage must fail loudly instead."""
-    rows = [("g", i, (1 << 60) + i if i % 7 else None) for i in range(50)]
-    df = spark.createDataFrame(rows, "g string, i long, h long")
-    with pytest.raises(Exception, match="non-NULL contract"):
-        _bottom_k_rank_batch_local(df, ["g"], ["h"], 5).collect()
+    got = _assert_matches_naive(df, ["o_orderstatus"], ["h"], 9)
+    plan = _plan(got)
+    assert "Python" not in plan and "MapInPandas" not in plan

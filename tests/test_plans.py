@@ -244,10 +244,8 @@ def test_sketch_builds_two_level_bottom_k(spark):
     per-group rank must be preceded by a per-(group, input-partition)
     rank + filter (operators/_bottomk.py), so no task sorts a whole
     group.  Checked structurally: each windowspecdefinition either
-    includes the __bk_pid partition column, sits above the __bk_rk
-    survivor filter produced by the old first level, or (r15
-    batch-local form) sits above the MapInPandas survivor stage that
-    bounds each group to __bk_lim rows per input batch."""
+    includes the __bk_pid partition column or sits above the __bk_rk
+    survivor filter produced by that first level."""
     from presto_spark.operators import khll, reservoir, setdigest, theta
 
     df = (
@@ -272,10 +270,7 @@ def test_sketch_builds_two_level_bottom_k(spark):
             if "__bk_pid" in ln:
                 continue  # the distributed per-partition level
             below = "\n".join(lines[i + 1:])
-            bounded = "__bk_rk" in below or (
-                "MapInPandas" in below and "__bk_lim" in below
-            )
-            assert bounded, (
+            assert "__bk_rk" in below, (
                 f"{name}: bare per-group window over unbounded rows:\n{ln}"
             )
 

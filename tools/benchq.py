@@ -2,8 +2,9 @@
 
 Usage: python tools/benchq.py [name-substr ...]
 
-Per query: prewarm -> (isolate, time collect()) x3 -> median, same as
-bench.py _measure, so numbers are directly comparable to BENCH_r*.json.
+Per query: bench.py's own measure_runs (prewarm -> (isolate, time
+collect()) x3 -> isolate) and its median, so numbers are directly
+comparable to BENCH_r*.json.
 Reads $SPARK_GRAFT_SF_DIR (default sf0.1).  Prints one line per query.
 """
 
@@ -16,6 +17,7 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from bench import measure_runs  # noqa: E402
 from presto_spark.queries import REGISTRY  # noqa: E402
 from presto_spark.session import get_spark, tune_for_input  # noqa: E402
 
@@ -38,22 +40,10 @@ def main() -> None:
     if substrs:
         names = [n for n in names if any(s in n for s in substrs)]
 
-    def _isolate() -> None:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
     spark.range(1).collect()
     for name in names:
         spark.sparkContext.setJobDescription(name)
-        REGISTRY[name].spark(spark, sf_dir).collect()
-        runs = []
-        for _ in range(3):
-            _isolate()
-            t0 = time.time()
-            REGISTRY[name].spark(spark, sf_dir).collect()
-            runs.append(time.time() - t0)
-        _isolate()
+        runs = measure_runs(spark, name, sf_dir)
         print(f"{name}: {sorted(runs)[1]:.3f}  (runs: "
               + ", ".join(f"{r:.3f}" for r in runs) + ")", flush=True)
 

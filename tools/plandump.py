@@ -18,6 +18,7 @@ import sys
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from bench import isolate  # noqa: E402
 from presto_spark.queries import REGISTRY  # noqa: E402
 from presto_spark.session import get_spark, tune_for_input  # noqa: E402
 
@@ -58,9 +59,7 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(f"{name}: {summarize(plan)}")
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        isolate(spark)
 
 
 if __name__ == "__main__":
