@@ -180,7 +180,6 @@ def train_bpe(
     min_pair_count: int = 2,
     checkpoint_every: int = 8,
     batch_merges: int = 1,
-    local_vocab_rows: int = LOCAL_VOCAB_ROWS,
 ) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` BPE merges from the corpus.
 
@@ -235,13 +234,12 @@ def train_bpe(
     # run the identical loop in-process.  Web-scale vocabularies
     # (hundreds of millions of unique words) exceed the limit and stay
     # on the distributed loop below.
-    if local_vocab_rows > 0:
-        head_rows = vocab.limit(local_vocab_rows + 1).collect()
-        if len(head_rows) <= local_vocab_rows:
-            release_checkpoints(spark, vocab_ids)
-            return _train_local(
-                [(list(r.syms), int(r["count"])) for r in head_rows],
-                n_merges, min_pair_count, batch_merges)
+    head_rows = vocab.limit(LOCAL_VOCAB_ROWS + 1).collect()
+    if len(head_rows) <= LOCAL_VOCAB_ROWS:
+        release_checkpoints(spark, vocab_ids)
+        return _train_local(
+            [(list(r.syms), int(r["count"])) for r in head_rows],
+            n_merges, min_pair_count, batch_merges)
     merges: list[tuple[str, str]] = []
     since_ckpt = 0
     try:

@@ -144,11 +144,10 @@ def with_shingles(
     the ~2 s LSH row at sf0.1.  The tokenize→hash→shingle chain now
     runs in one Arrow-batched pass (`_py_shingles`, value-exact per
     the parity pin above; ~3× faster and one fewer projection).  Every
-    consumer below reuses this column; callers that fan out into
-    multiple consumers should persist it (near_dedup_pairs does) — the
-    engine's CTE-materialization policy (SURVEY §4:
-    LogicalCteOptimizer.java has no Catalyst analog, so we persist
-    explicitly at the operator level).
+    consumer below reuses this column; pipelines that fan it out into
+    several consumers read it through ``_shingle_table``, whose one
+    hash exchange every consumer shares — the multi-reference CTE
+    materialized inside the plan (SURVEY §4, LogicalCteOptimizer.java).
 
     ``null_text_as_null=True`` keeps NULL text at NULL shingles instead
     of the Column chain's legacy [NULL] artifact — the NULL-guarded
@@ -254,6 +253,24 @@ def jaccard(col_a: Column, col_b: Column) -> Column:
     return F.round(inter.cast("double") / union, 6)
 
 
+def _shingle_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """with_shingles hash-partitioned on ``id_col``: the one exchange
+    that the signature aggregation and both verification joins read,
+    so AQE reuses it (ReusedExchange) and each corpus is shingled once.
+
+    The filter states the predicates the optimizer would otherwise
+    infer for only SOME consumers (isnotnull on the join key; non-NULL,
+    non-empty shingles under explode) and push below the exchange,
+    leaving the consumers' exchanges unequal and the shingle pass
+    duplicated.  It drops no row that could reach the result: a NULL
+    id never joins, and a doc without shingles has no signature."""
+    return with_shingles(df, id_col, text_col).where(
+        F.col(id_col).isNotNull()
+        & F.col("shingles").isNotNull()
+        & (F.size("shingles") > 0)
+    ).repartition(id_col)
+
+
 def near_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -263,28 +280,19 @@ def near_dedup_pairs(
     """Verified near-duplicate pairs: LSH candidates filtered by exact
     Jaccard ≥ threshold.  Returns (id_a, id_b, jaccard).
 
-    The shingle table feeds three consumers (signature aggregation and
-    both sides of the verification join) — persisted so shingling runs
-    once (explicit CTE materialization; Catalyst would otherwise inline
-    and recompute it per consumer).  The verified pairs are eagerly
-    materialized (localCheckpoint) so the shingle cache can be RELEASED
-    before returning — a long-lived session must not accumulate
-    persisted shingle tables across invocations (they are corpus-sized;
-    the pairs are not).
+    A lazy plan: building it runs no Spark job.  The shingle table
+    feeds three consumers (signature aggregation and both sides of the
+    verification join) through one shared exchange (_shingle_table),
+    so shingling runs once per execution and nothing stays pinned in
+    the session afterwards.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from presto_spark.operators.cte import checkpoint_tracked
-
-    sh = with_shingles(df, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = _shingle_table(df, id_col, text_col)
     cands = lsh_candidate_pairs_from_signatures(
         minhash_from_shingles(sh, id_col), id_col
     )
     a = sh.alias("sa")
     b = sh.alias("sb")
-    pairs, ids = checkpoint_tracked(
+    return (
         cands.join(a, cands.id_a == F.col(f"sa.{id_col}"))
         .join(b, cands.id_b == F.col(f"sb.{id_col}"))
         .select(
@@ -293,12 +301,6 @@ def near_dedup_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    sh.unpersist()
-    # Callers that fully consume the pairs (e.g. cluster assignment,
-    # which re-checkpoints its own labels) can release these blocks
-    # eagerly instead of waiting for GC + ContextCleaner:
-    pairs.checkpoint_rdd_ids = ids
-    return pairs
 
 
 def _banded_signatures(sig: DataFrame, id_col: str) -> DataFrame:
@@ -344,12 +346,13 @@ def near_dedup_against(
     from the batch, exactly like near_dedup_pairs' survivor policy.
 
     Plan shape (all ingredients shared with the in-corpus pipeline):
-    both corpora shingle ONCE (with_shingles; persisted — each feeds
-    its signature aggregation and the verification join), MinHash
-    signatures band identically on both sides, and candidates come
-    from an EQUI-join of the two banded tables on (band, bucket) — a
-    plain hash shuffle, never a corpus broadcast, never all-pairs.
-    Exact Jaccard over the shingle arrays verifies survivors.
+    a lazy plan in which each corpus shingles ONCE (_shingle_table —
+    its one exchange feeds both the signature aggregation and the
+    verification join), MinHash signatures band identically on both
+    sides, and candidates come from an EQUI-join of the two banded
+    tables on (band, bucket) — a plain hash shuffle, never a corpus
+    broadcast, never all-pairs.  Exact Jaccard over the shingle arrays
+    verifies survivors.
 
     Scale: the reference side's banded signatures are precomputable
     and reusable across batches (they are a pure function of the
@@ -361,36 +364,8 @@ def near_dedup_against(
     candidate (new_id, ref_id) pairs shuffle; text never leaves the
     scans.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from presto_spark.operators.cte import checkpoint_tracked
-
-    sh_new = with_shingles(new_docs, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    sh_ref = with_shingles(reference, ref_id_col, ref_text_col).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    pairs, ids = checkpoint_tracked(
-        _cross_near_dedup_plan(sh_new, sh_ref, id_col, ref_id_col,
-                               threshold))
-    sh_new.unpersist()
-    sh_ref.unpersist()
-    pairs.checkpoint_rdd_ids = ids
-    return pairs
-
-
-def _cross_near_dedup_plan(
-    sh_new: DataFrame,
-    sh_ref: DataFrame,
-    id_col: str,
-    ref_id_col: str,
-    threshold: float,
-) -> DataFrame:
-    """The un-checkpointed cross-corpus pipeline over two shingle
-    tables — split out so the plan pin (tests/test_plans.py) can
-    inspect the REAL candidate-join plan: the eager localCheckpoint in
-    near_dedup_against truncates executedPlan to a post-checkpoint
-    scan, which would make a plan assertion on the public API
-    vacuous."""
+    sh_new = _shingle_table(new_docs, id_col, text_col)
+    sh_ref = _shingle_table(reference, ref_id_col, ref_text_col)
     banded_new = _banded_signatures(
         minhash_from_shingles(sh_new, id_col), id_col
     ).select(F.col(id_col).alias("new_id"), "band", "bucket")
@@ -457,10 +432,7 @@ def _cc_local(
     return {n: comp_min[find(n)] for n in parent}
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iters: int = 20,
-    local_edge_rows: int = LOCAL_EDGE_ROWS,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-duplicate pairs → (doc_id, cluster_id).
 
     cluster_id = min doc_id reachable through the pair graph.  Iterative
@@ -489,16 +461,14 @@ def dedup_clusters(
     # join+checkpoint+count jobs whose cost at small scale is pure
     # scheduler overhead.  Identical output — both forms label every
     # node with the min id reachable through the pair graph.
-    if local_edge_rows > 0:
-        head = pairs.select("id_a", "id_b").limit(
-            local_edge_rows + 1).collect()
-        if len(head) <= local_edge_rows:
-            labels = _cc_local([(r.id_a, r.id_b) for r in head])
-            id_type = pairs.schema["id_a"].dataType.simpleString()
-            from presto_spark.local_table import local_df
-            return local_df(
-                spark, sorted(labels.items()),
-                f"doc_id {id_type}, cluster_id {id_type}")
+    head = pairs.select("id_a", "id_b").limit(LOCAL_EDGE_ROWS + 1).collect()
+    if len(head) <= LOCAL_EDGE_ROWS:
+        labels = _cc_local([(r.id_a, r.id_b) for r in head])
+        id_type = pairs.schema["id_a"].dataType.simpleString()
+        from presto_spark.local_table import local_df
+        return local_df(
+            spark, sorted(labels.items()),
+            f"doc_id {id_type}, cluster_id {id_type}")
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))

@@ -1,43 +1,21 @@
-"""Multi-reference CTE materialization policy.
+"""Local-checkpoint lifecycle for iterative operators.
 
-Presto materializes CTEs referenced more than once
-(reference: presto-main-base/.../sql/planner/optimizations/
-LogicalCteOptimizer.java, PhysicalCteOptimizer.java).  Catalyst inlines
-CTEs, so a WITH-clause subtree referenced N times is scanned and
-computed N times.  The engine-level policy: callers mark expensive
-shared subtrees with ``materialize`` and we persist them
-(MEMORY_AND_DISK — spills instead of OOM at scale), which is exactly
-the checkpoint a 1000-executor job wants for a reused multi-TB
-intermediate.
+Iterative trainers (llm/dedup.py dedup_clusters, llm/bpe.py train_bpe)
+localCheckpoint their per-round state to truncate lineage: round N's
+plan must not replan rounds 1..N-1.  ``DataFrame.unpersist`` cannot
+release local-checkpoint blocks, so the two helpers below record which
+RDD block-sets a checkpoint pinned and free them once a later round
+supersedes them.
+
+Multi-reference CTE materialization (Presto's LogicalCteOptimizer.java,
+PhysicalCteOptimizer.java) is not done here: a shared subtree is
+planned once behind an exchange that AQE reuses for every consumer
+(llm/dedup.py _shingle_table), so building a DataFrame runs no job.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
-
-
-def materialize(df: DataFrame) -> DataFrame:
-    """Persist a shared subtree (multi-reference CTE analog)."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-@contextmanager
-def materialized(df: DataFrame):
-    """Scoped version: persist for the duration, then release.
-
-    Use when the shared subtree is consumed fully inside one job burst::
-
-        with materialized(shingles) as sh:
-            result = build(sh).collect()
-    """
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        yield df
-    finally:
-        df.unpersist()
 
 
 def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, list[int]]:

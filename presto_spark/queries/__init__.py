@@ -74,9 +74,17 @@ from presto_spark.queries import corpus_suite  # noqa: F401,E402
 #   NO new rows: VERDICT r15 #10 — the four pre-built tiers
 #   (dupspan, temperature mix, perceptual image/audio) wait for the
 #   next build round to register.
+# Lazy LSH builders (llm/dedup.py near_dedup_pairs/near_dedup_against
+# return plans; no persist or eager checkpoint): EDITED => RE-FRONT
+# brings in llm_lsh_near_dedup and llm_cross_near_dedup
+# (llm_dedup_clusters and llm_bpe_train, whose gate constants also
+# changed, are already in group 1).  They displace the last two r9
+# burn rows, tpcds_q8_supplier_rich_nations and
+# tpcds_q18_rollup_dimension_averages, which join the r17 burn queue
+# after q35/q71 and ahead of the r10 block.
 # tests/test_registry_front.py pins list(REGISTRY)[:50] == this list.
 _DRIVER_FRONT = [
-    # 1. edited => re-front (bottom-k gate + clustering edits)
+    # 1. edited => re-front (bottom-k gate, clustering, lazy LSH edits)
     "sketch_khll_privacy_audit",
     "sketch_theta_estimate_envelope",
     "sketch_theta_exact_ops",
@@ -89,6 +97,8 @@ _DRIVER_FRONT = [
     "llm_ann_ivf_topk",
     "llm_lm_perplexity",
     "llm_dedup_clusters",
+    "llm_lsh_near_dedup",
+    "llm_cross_near_dedup",
     "llm_bpe_train",
     "geo_aggregate_hulls",
     # 2a. the 4 deferred r8 rows
@@ -96,7 +106,7 @@ _DRIVER_FRONT = [
     "tpcds_q59_weekday_pivot_yoy",
     "tpcds_q64_cross_year_repeat_purchases",
     "tpcds_q66_monthly_pivot_report",
-    # 2b. the full 34-row r9 block
+    # 2b. 30 rows of the 34-row r9 block
     "tpcds_q4_triple_channel_growth",
     "tpcds_q9_bucket_case_subqueries",
     "tpcds_q10_disjunctive_exists",
@@ -127,8 +137,6 @@ _DRIVER_FRONT = [
     "tpcds_q50_ship_latency_buckets",
     "tpcds_q77_channel_profit_totals",
     "ml_learn_classify_golden",
-    "tpcds_q8_supplier_rich_nations",
-    "tpcds_q18_rollup_dimension_averages",
 ]
 
 

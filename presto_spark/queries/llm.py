@@ -757,16 +757,10 @@ def llm_multimodal_frame_sample(spark, sf_dir):
 )
 def llm_dedup_clusters(spark, sf_dir):
     prepare(spark, sf_dir)
-    from presto_spark.operators.cte import release_checkpoints
-
     docs = spark.table("documents").select("doc_id", "text")
     pairs = dedup.near_dedup_pairs(docs, threshold=0.5)
-    out = dedup.dedup_clusters(pairs.select("id_a", "id_b"))
-    # dedup_clusters materialized its own label checkpoints — the pairs
-    # checkpoint is now an unreferenced intermediate; release it here
-    # instead of leaving corpus-sized blocks to GC timing.
-    release_checkpoints(spark, getattr(pairs, "checkpoint_rdd_ids", []))
-    return out.orderBy("doc_id")
+    return dedup.dedup_clusters(pairs.select("id_a", "id_b")).orderBy(
+        "doc_id")
 
 
 @register(

@@ -133,12 +133,10 @@ _DIALECT_SPELLINGS: dict[str, tuple[str, str, str]] = {
 
 def _presto_spell(spark_ddl_type: str) -> str:
     """Spark DDL type spelling → Presto type-signature spelling, via the
-    parsed DataType (so nested array<>/map<> convert too)."""
-    try:
-        return presto_type_name(
-            T._parse_datatype_string(spark_ddl_type))
-    except Exception:
-        return spark_ddl_type.strip().lower()
+    parsed DataType (so nested array<>/map<> convert too).  Every
+    registered shim's type spelling parses (tests/test_engine.py pins
+    it), so a parse error is a registry bug and propagates."""
+    return presto_type_name(T._parse_datatype_string(spark_ddl_type))
 
 
 def _sig_arg_types(args_ddl: str) -> str:
@@ -260,11 +258,8 @@ def show_session(spark: SparkSession) -> DataFrame:
 
     rows = []
     for name, (conf, _xlate) in sorted(_MAPPING.items()):
-        try:
-            value = spark.conf.get(conf)
-        except Exception:
-            value = ""
-        rows.append((name, value, "", "varchar", f"maps to {conf}"))
+        rows.append((name, spark.conf.get(conf), "", "varchar",
+                     f"maps to {conf}"))
     return spark.createDataFrame(
         rows,
         "Name string, Value string, `Default` string, Type string, "

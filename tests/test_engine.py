@@ -92,6 +92,21 @@ def test_show_functions_presto_shape(eng):
     assert "sum" in by_name and "transform" in by_name
 
 
+def test_show_functions_every_registered_type_spells(eng):
+    """_presto_spell has no fallback: every type spelling the SQL-UDF
+    and bitwise shim registries declare must parse to a DataType."""
+    from presto_spark.functions.dialect import BITWISE_UDFS
+    from presto_spark.functions.registry import _SQL_UDFS
+    from presto_spark.show import _presto_spell, _sig_arg_types
+
+    specs = [(args, ret) for args, ret, *_ in _SQL_UDFS.values()]
+    specs += [(args, ret) for args, ret, _ in BITWISE_UDFS.values()]
+    assert specs
+    for args, ret in specs:
+        assert _presto_spell(ret)
+        _sig_arg_types(args)
+
+
 def test_show_functions_like_filter(eng):
     names = [r.Function for r in
              eng.sql("SHOW FUNCTIONS LIKE 'approx%'").collect()]

@@ -143,26 +143,36 @@ def test_with_shingles_python_matches_column_path(spark):
     assert null_mode == {
         k: (None if cases[k] is None else v) for k, v in column_path.items()
     }
+
+
+def test_dedup_clusters_local_matches_distributed(spark, monkeypatch):
     """r15 optimization round: the size-gated driver-local union-find
     fast path must produce the IDENTICAL (doc_id, cluster_id) labeling
     as the distributed min-label propagation — including long chains
     (multiple propagation rounds) and the probe-overflow boundary
-    (local_edge_rows smaller than the edge count forces the
+    (LOCAL_EDGE_ROWS smaller than the edge count forces the
     distributed path)."""
     edges = ([(i, i + 1) for i in range(1, 9)]         # 8-node chain
              + [(20, 21), (22, 21), (23, 20)]          # star, mixed dirs
              + [(30, 31)])
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    local = {(r.doc_id, r.cluster_id)
-             for r in dedup.dedup_clusters(pairs).collect()}
-    dist = {(r.doc_id, r.cluster_id)
-            for r in dedup.dedup_clusters(
-                pairs, local_edge_rows=0).collect()}
-    assert local == dist
-    boundary = {(r.doc_id, r.cluster_id)
-                for r in dedup.dedup_clusters(
-                    pairs, local_edge_rows=3).collect()}
-    assert boundary == dist
+    default_limit = dedup.LOCAL_EDGE_ROWS
+    local_runs = []
+    cc_local = dedup._cc_local
+    monkeypatch.setattr(dedup, "_cc_local",
+                        lambda e: local_runs.append(1) or cc_local(e))
+
+    def clusters(limit, local):
+        monkeypatch.setattr(dedup, "LOCAL_EDGE_ROWS", limit)
+        local_runs.clear()
+        out = {(r.doc_id, r.cluster_id)
+               for r in dedup.dedup_clusters(pairs).collect()}
+        assert bool(local_runs) == local, limit
+        return out
+
+    dist = clusters(0, False)
+    assert clusters(default_limit, True) == dist
+    assert clusters(3, False) == dist
 
 
 # ---- repetition filters + PII redaction (llm/text.py round-6) ----
@@ -757,12 +767,12 @@ def test_train_bpe_batched_mode_guarantees(spark):
         bpe.train_bpe(df, n_merges=2, batch_merges=0)
 
 
-def test_train_bpe_local_matches_distributed(spark):
+def test_train_bpe_local_matches_distributed(spark, monkeypatch):
     """r15 optimization round: the size-gated driver-local merge loop
     (train_bpe's small-vocab fast path) must produce the IDENTICAL
     merge list as the distributed loop — in exact mode and in batched
     mode — since the registry oracle replays the exact sequential
-    algorithm.  local_vocab_rows=0 forces the distributed path."""
+    algorithm.  LOCAL_VOCAB_ROWS=0 forces the distributed path."""
     from presto_spark.llm import bpe
 
     texts = ["low low low low low",
@@ -771,14 +781,27 @@ def test_train_bpe_local_matches_distributed(spark):
              "a bb a bb ccc ccc d"]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+
+    default_limit = bpe.LOCAL_VOCAB_ROWS
+    local_runs = []
+    train_local = bpe._train_local
+    monkeypatch.setattr(bpe, "_train_local",
+                        lambda *a: local_runs.append(1) or train_local(*a))
+
+    def train(limit, local, **kw):
+        monkeypatch.setattr(bpe, "LOCAL_VOCAB_ROWS", limit)
+        local_runs.clear()
+        merges = bpe.train_bpe(df, **kw)
+        assert bool(local_runs) == local, (limit, kw)
+        return merges
+
     for kw in ({}, {"batch_merges": 4}, {"min_pair_count": 3}):
-        local = bpe.train_bpe(df, n_merges=8, **kw)
-        dist = bpe.train_bpe(df, n_merges=8, local_vocab_rows=0, **kw)
+        local = train(default_limit, True, n_merges=8, **kw)
+        dist = train(0, False, n_merges=8, **kw)
         assert local == dist, kw
     # The probe boundary: a vocab LARGER than the limit must also take
     # the distributed path (limit n+1 sees n+1 rows) and still agree.
-    tiny_limit = bpe.train_bpe(df, n_merges=4, local_vocab_rows=2)
-    assert tiny_limit == bpe.train_bpe(df, n_merges=4, local_vocab_rows=0)
+    assert train(2, False, n_merges=4) == train(0, False, n_merges=4)
 
 
 def test_bigram_lm_lazy_vocab_matches_eager(spark):

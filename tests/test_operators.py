@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_spark.operators import aggregates as A
-from presto_spark.operators import cte, relational as R
+from presto_spark.operators import relational as R
 
 
 def test_map_agg(spark):
@@ -119,14 +119,6 @@ def test_assign_unique_id_is_unique(spark):
     out = R.assign_unique_id(df).select("unique_id").collect()
     ids = [r.unique_id for r in out]
     assert len(set(ids)) == len(ids)
-
-
-def test_materialized_context_persists_and_releases(spark):
-    df = spark.range(10)
-    with cte.materialized(df) as d:
-        assert d.count() == 10
-        assert d.storageLevel.useMemory
-    assert not df.storageLevel.useMemory
 
 
 def test_groups_frame_ties_counted_as_one_group(spark):

@@ -330,35 +330,71 @@ def test_q38_intersect_plans_as_semi_joins(spark):
     assert _optimized(df).count("LeftSemi") == 2
 
 
+def _final_plan(df) -> str:
+    """Execute ``df`` and return AQE's final physical plan — the plan
+    in which exchange reuse (ReusedExchange) is visible."""
+    df.collect()
+    plan = _physical(df)
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _cross_near_dedup(spark):
+    from presto_spark.llm import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text")
+    return dedup.near_dedup_against(
+        docs.where(F.col("doc_id") % 2 == 1),
+        docs.where(F.col("doc_id") % 2 == 0), threshold=0.5)
+
+
 def test_cross_near_dedup_plan_no_corpus_broadcast(spark):
     """near_dedup_against (llm/dedup.py) must plan its candidate stage
     as an equi-join of the two banded signature tables on
     (band, bucket): with broadcast suppressed the plan contains no
     BroadcastExchange and no NestedLoop/Cartesian — neither corpus is
     ever broadcast or all-pairs joined (VERDICT r13 next-round #2).
-    Inspects the un-checkpointed internal pipeline: the public API's
-    eager localCheckpoint truncates executedPlan to a post-checkpoint
-    scan, which would make this assertion vacuous."""
-    from presto_spark.llm import dedup
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text")
+    The public function returns a lazy plan, so both its pre-execution
+    plan and AQE's final plan are the real pipeline."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        out = dedup._cross_near_dedup_plan(
-            dedup.with_shingles(docs.where(F.col("doc_id") % 2 == 1)),
-            dedup.with_shingles(docs.where(F.col("doc_id") % 2 == 0)),
-            "doc_id", "doc_id", 0.5)
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        out = _cross_near_dedup(spark)
+        plans = [_physical(out), _final_plan(out)]
     finally:
         spark.conf.set(key, prev)
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-    assert "BroadcastExchange" not in plan
-    # the banded equi-join is really there: shuffle joins keyed on
-    # band+bucket appear as SortMergeJoin/ShuffledHashJoin
-    assert "Join" in plan
+    for plan in plans:
+        assert "NestedLoop" not in plan and "Cartesian" not in plan
+        assert "BroadcastExchange" not in plan
+        # the banded equi-join is really there: shuffle joins keyed on
+        # band+bucket appear as SortMergeJoin/ShuffledHashJoin
+        assert "Join" in plan
+    # shuffle joins: each side's one shingle exchange also feeds the
+    # verification join (reused, not re-shingled)
+    assert plans[1].count("MapInPandas") == 2
+    assert "ReusedExchange" in plans[1]
+
+
+def test_cross_near_dedup_shingles_each_side_once(spark):
+    """With broadcast joins allowed, each corpus is still shingled
+    exactly once: the verification join's broadcast reads the reused
+    shingle exchange instead of re-running the Arrow pass."""
+    plan = _final_plan(_cross_near_dedup(spark))
+    assert plan.count("MapInPandas") == 2
+    assert plan.count("ReusedExchange") == 2
+
+
+def test_near_dedup_pairs_shingles_corpus_once(spark):
+    """near_dedup_pairs' three shingle-table consumers (signatures and
+    both verification sides) share one exchange: one Arrow pass."""
+    from presto_spark.llm import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text")
+    plan = _final_plan(dedup.near_dedup_pairs(docs, threshold=0.5))
+    assert plan.count("MapInPandas") == 1
+    assert "ReusedExchange" in plan
 
 
 def test_perceptual_hash_pairs_plan_no_cartesian(spark):

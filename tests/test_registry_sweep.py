@@ -44,11 +44,10 @@ def test_query_matches_oracle(spark, duck, name):
 def test_no_collection_columns_in_any_registry_output(spark):
     """Registry-wide rule: final projections serialize ARRAY/MAP columns
     (to_json / concat_ws) so the driver's pandas-sort canonicalizer never
-    sees an unhashable list cell.  Mostly plan-only — but building
-    llm_near_dedup_pairs / llm_dedup_clusters EXECUTES the LSH+verify
-    pipeline (near_dedup_pairs localCheckpoints eagerly at construction
-    so its corpus-sized shingle cache can be released before return —
-    lifecycle hygiene is worth the eager run here)."""
+    sees an unhashable list cell.  Mostly plan-only: the LSH near-dedup
+    builders return lazy plans, and the rows that still run jobs while
+    building (gate probes, iterative trainers) are pinned per row in
+    tests/test_build_jobs.py."""
     from pyspark.sql.types import ArrayType, MapType
 
     offenders = []

@@ -2,16 +2,16 @@
 session and must leave no persisted/checkpointed state behind, and must
 not get slower on the second pass.
 
-Locks in the round-3/4 lifecycle work (near_dedup_pairs/dedup_clusters
-releasing their persist/localCheckpoint blocks — llm/dedup.py,
-operators/cte.py checkpoint_tracked/release_checkpoints): a regression
-that leaks strongly-pinned blocks would show up here as RDDs that
-survive explicit release, the exact failure mode that poisoned the r2
-bench session (DataFrame.unpersist cannot drop local-checkpoint
-blocks).
+Locks in the lifecycle of the iterative operators (dedup_clusters and
+train_bpe releasing their per-round localCheckpoint blocks —
+operators/cte.py checkpoint_tracked/release_checkpoints) and of the
+lazy LSH near-dedup plans, which pin nothing at all: a regression that
+leaks strongly-pinned blocks would show up here as RDDs that survive
+explicit release, the exact failure mode that poisoned the r2 bench
+session (DataFrame.unpersist cannot drop local-checkpoint blocks).
 
 Protocol: after each query, any NEW persistent blocks (the
-caller-owned result checkpoints of the dedup operators) are released
+caller-owned result checkpoints of the iterative operators) are released
 explicitly via the SparkContext registry — the same cleanup bench.py's
 _isolate performs, and what a long-lived production session does when
 it drops a result.  This keeps the assertion deterministic: GC-based
@@ -35,13 +35,13 @@ pytestmark = pytest.mark.slow
 
 # The heaviest bench-tagged queries by BENCH_r03 wall time — the set
 # whose lifecycle behavior matters in a long-lived session (iterative
-# checkpointing, LSH persist/release, applyInPandas sketch tiers,
+# checkpointing, LSH shingle exchanges, applyInPandas sketch tiers,
 # recursive CTEs, big self-joins).
 _HEAVY = [
     "llm_dedup_clusters",
     "llm_lsh_near_dedup",
-    # round-14: cross-corpus near-dedup persists BOTH shingle tables
-    # and checkpoints the verified pairs — same lifecycle contract
+    # round-14: cross-corpus near-dedup — two shingle tables, each
+    # behind one reused exchange; nothing may stay pinned
     "llm_cross_near_dedup",
     "analytics_market_basket",
     "analytics_yoy_growth",
