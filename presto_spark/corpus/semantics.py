@@ -438,12 +438,14 @@ def run_semantic_case(spark, duck, case: "SemanticCase",
                                "nondeterministic or engine-specific output")
     if translate is None:
         from presto_spark.functions.dialect import translate as translate
+    from presto_spark.functions.registry import run_sql
+
     reads_tables = bool(_TABLES_RE.search(case.query))
     count_only = bool(
         _LIMIT_RE.search(case.query) and not _ORDER_RE.search(case.query)
     ) or (reads_tables and _TIEBREAK_RE.search(case.query))
     try:
-        actual = spark.sql(translate(case.query)).collect()
+        actual = run_sql(spark, translate(case.query)).collect()
     except Exception as e:  # noqa: BLE001 — triaged by the caller
         return SemanticOutcome(case.source, "engine-error",
                                f"{type(e).__name__}: {str(e)[:200]}")

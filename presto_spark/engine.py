@@ -22,9 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from presto_spark import prepared as _prep
 from presto_spark import show as _show
 from presto_spark.functions.dialect import translate
-from presto_spark.functions.registry import (register_functions,
-                                              register_geo_sql_functions,
-                                              register_llm_sql_functions)
+from presto_spark.functions.registry import run_sql
 from presto_spark.session_properties import set_session_property
 from presto_spark.sources.catalog import TABLES, register_tables
 
@@ -44,11 +42,6 @@ class Engine:
 
     def __init__(self, spark: SparkSession, sf_dir: str | None = None, tables=TABLES):
         self.spark = spark
-        register_functions(spark)
-        # full SQL surface at the facade; registry rows register the
-        # geo/llm tiers lazily instead (analyzer-drag split, round 12)
-        register_geo_sql_functions(spark)
-        register_llm_sql_functions(spark)
         self.tables: dict[str, DataFrame] = {}
         self.prepared = _prep.PreparedStatements()
         if sf_dir is not None:
@@ -67,7 +60,8 @@ class Engine:
         PREPARE / DESCRIBE INPUT|OUTPUT go through the per-engine
         statement registry (prepared.py — the protocol every Presto
         client driver speaks, SqlBase.g4:168-172).  Other statements go
-        to Spark SQL.
+        to Spark SQL.  Each text handed to Spark first registers the
+        compat shims it calls (functions/registry.py).
         """
         m = _SET_SESSION_RE.match(query)
         if m:
@@ -83,7 +77,7 @@ class Engine:
             return routed
         if dialect == "presto":
             query = translate(query)
-        return self.spark.sql(query)
+        return run_sql(self.spark, query)
 
     def _statement(self, query: str, dialect: str) -> DataFrame | None:
         """Route prepared-statement protocol statements; None = not one."""
@@ -114,7 +108,7 @@ class Engine:
             text = _prep.substitute(stmt, ["NULL"] * n)
             if dialect == "presto":
                 text = translate(text)
-            schema = self.spark.sql(text).schema
+            schema = run_sql(self.spark, text).schema
             rows = [
                 (f.name, "", "", "", _prep.presto_type_name(f.dataType), 0, True)
                 for f in schema.fields
@@ -152,7 +146,7 @@ class Engine:
             # an argument containing quotes or sentinel-shaped text
             # cannot break out of its expression context (ADVICE r6).
             text = _prep.splice_sentinels(text, args)
-            return self.spark.sql(text)
+            return run_sql(self.spark, text)
         return None
 
     def table(self, name: str) -> DataFrame:

@@ -6,9 +6,9 @@ dialect, but the north-star LLM operators were DataFrame-only — a data
 engineer who lives in SQL could not reach simhash16 / html_to_text /
 split_bucket / poly_hash / the quality-score expression without
 Python.  Same recipe as the geo tier's SQL surface
-(registry.register_geo_sql_functions / functions/geo_sql_measures.py):
-pure-expression SQL temp-function bodies, registered lazily so the
-multi-KB folds don't drag the analyzer for unrelated queries.
+(functions/geo_sql_measures.py): pure-expression SQL temp-function
+bodies in the registry's one shim table, registered only for queries
+that call them.
 
 Drift control: everything derivable from a Python table IS derived
 from it — the html_to_text chain is generated from

@@ -11,12 +11,29 @@ builtin of different semantics are handled by the dialect rewriter
 (see dialect.py) because Spark refuses to shadow builtins.
 
 Each entry cites the Presto source it reproduces.  All bodies are pure
-column expressions → they inline into codegen and scale like builtins.
+column expressions → they inline into codegen and scale like builtins;
+the few functions no expression can reach are Arrow-batched pandas
+UDFs (``_PY_UDFS``).
+
+Registration is on demand, the way Presto resolves a function when a
+query names it (FunctionAndTypeManager at analysis time): ``shims()``
+is the one table of every shim, and ``register_functions`` is given the
+SQL text a query will run, registers the shims that text calls plus
+the shims their bodies call, and records them on the session object.
+No session pays for the whole library up front, and a body that is
+never called never slows the analysis of unrelated queries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import functools
+import importlib
+import re
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, SparkSession
+
+from presto_spark.functions.dialect import BITWISE_UDFS
 
 
 def _ip2long(ip: str) -> str:
@@ -1034,212 +1051,247 @@ _SQL_UDFS: dict[str, tuple[str, str, str, str]] = {
 }
 
 
-from presto_spark.functions.dialect import BITWISE_UDFS
+class Shim(NamedTuple):
+    """One compat function: a SQL body, or (``body`` None) the Python
+    UDF at ``udf``.  ``calls`` are the shims the body calls."""
+
+    args: str  # Spark DDL argument list
+    ret: str  # Spark DDL return type
+    body: str | None
+    cite: str
+    udf: str = ""  # "module:attribute"
+    calls: frozenset[str] = frozenset()
 
 
-def _ddl(name: str, args: str, ret: str, body: str) -> str:
-    return (f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-            f"RETURNS {ret} RETURN {body}")
+_CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 
 
-def register_functions(spark: SparkSession) -> list[str]:
-    """Register the Presto-compat SQL UDFs into this session.
-
-    Returns the list of registered names.  Failures raise — a shim that
-    silently fails to register would surface as a confusing parse error
-    at query time instead.
-    """
-    registered = []
-    for name, (args, ret, body, _cite) in _SQL_UDFS.items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    for name, (args, ret, body) in BITWISE_UDFS.items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    # Color/bar terminal-rendering tier (ColorFunctions.java) — bodies
-    # are generated SQL text, see functions/color.py.
-    from presto_spark.functions.color import COLOR_UDFS
-
-    for name, (args, ret, body, _cite) in COLOR_UDFS.items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    # ML scalar tier (presto-ml MLFunctions.java) — Arrow-batched
-    # model-scoring UDFs; training lives in operators/ml.py as
-    # DataFrame operators (the reference trains inside a final-node
-    # aggregate, the same single-site semantics).
-    from presto_spark.operators import ml as _ml
-
-    for name, fn in (
-        ("classify", _ml.classify),
-        ("classify_varchar", _ml.classify_varchar),
-        ("regress", _ml.regress),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # Extended-JSONPath tier (recursive descent / filters / bracket names /
-    # slices — Jayway fallback in the reference, JsonPath.java:140).
-    # Arrow-batched pandas UDFs; the dialect layer routes literal extended
-    # paths here, plain paths stay on JVM get_json_object.
-    from presto_spark.functions import _json_pandas_udfs as _jp
-
-    for name, fn in (
-        ("json_extract_py", _jp.json_extract_py),
-        ("json_extract_scalar_py", _jp.json_extract_scalar_py),
-        ("json_size_py", _jp.json_size_py),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # Per-row datetime patterns (DateTimeFunctions.java evaluates the
-    # pattern per row; Spark's date_format wants a constant).  The dialect
-    # layer routes column-valued patterns to these Arrow-batched renderers.
-    from presto_spark.functions import _datetime_pandas_udfs as _dtp
-
-    for name, fn in (
-        ("date_format_py", _dtp.date_format_py),
-        ("format_datetime_py", _dtp.format_datetime_py),
-        ("date_parse_py", _dtp.date_parse_py),
-        ("parse_datetime_py", _dtp.parse_datetime_py),
-        # Teradata to_char/to_date/to_timestamp with column-valued
-        # formats (TeradataDateFunctions compiles per value at runtime)
-        ("to_char_td_py", _dtp.to_char_td_py),
-        ("to_date_td_py", _dtp.to_date_td_py),
-        ("to_timestamp_td_py", _dtp.to_timestamp_td_py),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # word_stem: full Porter parity (WordStemFunction.java → Lucene
-    # PorterStemmer).  Arrow-batched; the JVM S-stemmer stays available
-    # as word_stem_simple for hot paths that accept the approximation.
-    from presto_spark.functions import _text_pandas_udfs as _tp
-
-    spark.udf.register("word_stem", _tp.word_stem_udf)
-    spark.udf.register("jarowinkler_similarity", _tp.jarowinkler_udf)
-    spark.udf.register("normalize", _tp.normalize_udf)
-    registered += ["word_stem", "jarowinkler_similarity", "normalize"]
-    # Incomplete-integral CDF family (MathFunctions.java beta_cdf/
-    # binomial_cdf/chi_squared_cdf/f_cdf/gamma_cdf/poisson_cdf) —
-    # no closed form, so the regularized incomplete gamma/beta live in
-    # functions/stats.py behind Arrow-batched UDFs.
-    from presto_spark.functions import _stats_pandas_udfs as _sp
-
-    for name, fn in (
-        ("beta_cdf", _sp.beta_cdf_udf),
-        ("binomial_cdf", _sp.binomial_cdf_udf),
-        ("chi_squared_cdf", _sp.chi_squared_cdf_udf),
-        ("f_cdf", _sp.f_cdf_udf),
-        ("gamma_cdf", _sp.gamma_cdf_udf),
-        ("poisson_cdf", _sp.poisson_cdf_udf),
-        ("inverse_beta_cdf", _sp.inverse_beta_cdf_udf),
-        ("t_cdf", _sp.t_cdf_udf),
-        ("inverse_t_cdf", _sp.inverse_t_cdf_udf),
-        ("inverse_chi_squared_cdf", _sp.inverse_chi_squared_cdf_udf),
-        ("inverse_gamma_cdf", _sp.inverse_gamma_cdf_udf),
-        ("inverse_f_cdf", _sp.inverse_f_cdf_udf),
-        ("inverse_poisson_cdf", _sp.inverse_poisson_cdf_udf),
-        ("inverse_binomial_cdf", _sp.inverse_binomial_cdf_udf),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    # Binary-function tail (HmacFunctions.java; VarbinaryFunctions
-    # .java:250-307): HMAC, IEEE 754 byte codecs, murmur3_x64_128 —
-    # no JVM builtins exist, Arrow-batched UDFs pinned against the
-    # reference's own test vectors (TestVarbinaryFunctions.java).
-    from presto_spark.functions import _binary_pandas_udfs as _bp
-
-    for name, fn in (
-        ("hmac_md5", _bp.hmac_md5_udf),
-        ("hmac_sha1", _bp.hmac_sha1_udf),
-        ("hmac_sha256", _bp.hmac_sha256_udf),
-        ("hmac_sha512", _bp.hmac_sha512_udf),
-        ("murmur3_x64_128", _bp.murmur3_x64_128_udf),
-        ("to_ieee754_32", _bp.to_ieee754_32_udf),
-        ("from_ieee754_32", _bp.from_ieee754_32_udf),
-        ("to_ieee754_64", _bp.to_ieee754_64_udf),
-        ("from_ieee754_64", _bp.from_ieee754_64_udf),
-        ("to_base32", _bp.to_base32_udf),
-        ("from_base32", _bp.from_base32_udf),
-        ("spooky_hash_v2_32", _bp.spooky_hash_v2_32_udf),
-        ("spooky_hash_v2_64", _bp.spooky_hash_v2_64_udf),
-        ("fnv1_32", _bp.fnv1_32_udf),
-        ("fnv1_64", _bp.fnv1_64_udf),
-        ("fnv1a_32", _bp.fnv1a_32_udf),
-        ("fnv1a_64", _bp.fnv1a_64_udf),
-    ):
-        spark.udf.register(name, fn)
-        registered.append(name)
-    return registered
+def _called(text: str) -> set[str]:
+    """Lower-cased names written as ``name(`` in SQL text."""
+    return {m.group(1).lower() for m in _CALL_RE.finditer(text)}
 
 
+# name -> (Spark DDL arguments, return type, reference citation,
+# "module:attribute").  Arrow-batched pandas UDFs for the functions no
+# SQL expression can reach; a module is imported only when one of its
+# shims is first registered.
+_M = "presto_spark.functions."
+_PY_UDFS: dict[str, tuple[str, str, str, str]] = {
+    # ---- ML scalar tier (presto-ml MLFunctions.java): model scoring;
+    # training lives in operators/ml.py as DataFrame operators (the
+    # reference trains inside a final-node aggregate, the same
+    # single-site semantics) ----
+    "classify": ("features MAP<BIGINT, DOUBLE>, model STRING", "BIGINT",
+                 "MLFunctions.java:55 classify (bigint classifier)",
+                 "presto_spark.operators.ml:classify"),
+    "classify_varchar": (
+        "features MAP<BIGINT, DOUBLE>, model STRING", "STRING",
+        "MLFunctions.java:42 varcharClassify",
+        "presto_spark.operators.ml:classify_varchar"),
+    "regress": ("features MAP<BIGINT, DOUBLE>, model STRING", "DOUBLE",
+                "MLFunctions.java:66 regress",
+                "presto_spark.operators.ml:regress"),
+    # ---- extended JSONPath (recursive descent / filters / bracket
+    # names / slices — the Jayway fallback, JsonPath.java:140); the
+    # dialect routes literal extended paths here, plain paths stay on
+    # JVM get_json_object ----
+    "json_extract_py": ("j STRING, p STRING", "STRING",
+                        "JsonExtract.java (extended JSONPath)",
+                        _M + "_json_pandas_udfs:json_extract_py"),
+    "json_extract_scalar_py": (
+        "j STRING, p STRING", "STRING",
+        "JsonFunctions.java jsonExtractScalar (extended JSONPath)",
+        _M + "_json_pandas_udfs:json_extract_scalar_py"),
+    "json_size_py": ("j STRING, p STRING", "BIGINT",
+                     "JsonFunctions.java jsonSize (extended JSONPath)",
+                     _M + "_json_pandas_udfs:json_size_py"),
+    # ---- per-row datetime patterns (DateTimeFunctions.java evaluates
+    # the pattern per row; Spark's date_format wants a constant) and
+    # the Teradata forms with column-valued formats ----
+    "date_format_py": ("t TIMESTAMP_NTZ, f STRING", "STRING",
+                       "DateTimeFunctions.java dateFormat",
+                       _M + "_datetime_pandas_udfs:date_format_py"),
+    "format_datetime_py": ("t TIMESTAMP_NTZ, f STRING", "STRING",
+                           "DateTimeFunctions.java formatDatetime",
+                           _M + "_datetime_pandas_udfs:format_datetime_py"),
+    "date_parse_py": ("s STRING, f STRING", "TIMESTAMP_NTZ",
+                      "DateTimeFunctions.java dateParse",
+                      _M + "_datetime_pandas_udfs:date_parse_py"),
+    "parse_datetime_py": ("s STRING, f STRING", "TIMESTAMP_NTZ",
+                          "DateTimeFunctions.java parseDatetime",
+                          _M + "_datetime_pandas_udfs:parse_datetime_py"),
+    "to_char_td_py": ("t TIMESTAMP_NTZ, f STRING", "STRING",
+                      "TeradataDateFunctions.java toChar",
+                      _M + "_datetime_pandas_udfs:to_char_td_py"),
+    "to_date_td_py": ("s STRING, f STRING", "DATE",
+                      "TeradataDateFunctions.java toDate",
+                      _M + "_datetime_pandas_udfs:to_date_td_py"),
+    "to_timestamp_td_py": ("s STRING, f STRING", "TIMESTAMP_NTZ",
+                           "TeradataDateFunctions.java toTimestamp",
+                           _M + "_datetime_pandas_udfs:to_timestamp_td_py"),
+    # ---- text: full Porter parity (WordStemFunction.java → Lucene
+    # PorterStemmer; word_stem_simple is the JVM approximation) ----
+    "word_stem": ("w STRING", "STRING",
+                  "WordStemFunction.java (Porter stemmer)",
+                  _M + "_text_pandas_udfs:word_stem_udf"),
+    "jarowinkler_similarity": (
+        "a STRING, b STRING", "DOUBLE",
+        "StringFunctions.java jaroWinklerSimilarity",
+        _M + "_text_pandas_udfs:jarowinkler_udf"),
+    "normalize": ("s STRING, form STRING", "STRING",
+                  "StringFunctions.java normalize (NFC/NFD/NFKC/NFKD)",
+                  _M + "_text_pandas_udfs:normalize_udf"),
+    # ---- incomplete-integral CDF family (MathFunctions.java): no
+    # closed form, so the regularized incomplete gamma/beta live in
+    # functions/stats.py ----
+    "beta_cdf": ("a DOUBLE, b DOUBLE, v DOUBLE", "DOUBLE",
+                 "MathFunctions.java betaCdf",
+                 _M + "_stats_pandas_udfs:beta_cdf_udf"),
+    "binomial_cdf": ("n BIGINT, p DOUBLE, k BIGINT", "DOUBLE",
+                     "MathFunctions.java binomialCdf",
+                     _M + "_stats_pandas_udfs:binomial_cdf_udf"),
+    "chi_squared_cdf": ("df DOUBLE, v DOUBLE", "DOUBLE",
+                        "MathFunctions.java chiSquaredCdf",
+                        _M + "_stats_pandas_udfs:chi_squared_cdf_udf"),
+    "f_cdf": ("d1 DOUBLE, d2 DOUBLE, v DOUBLE", "DOUBLE",
+              "MathFunctions.java fCdf",
+              _M + "_stats_pandas_udfs:f_cdf_udf"),
+    "gamma_cdf": ("shape DOUBLE, scale DOUBLE, v DOUBLE", "DOUBLE",
+                  "MathFunctions.java gammaCdf",
+                  _M + "_stats_pandas_udfs:gamma_cdf_udf"),
+    "poisson_cdf": ("lam DOUBLE, k BIGINT", "DOUBLE",
+                    "MathFunctions.java poissonCdf",
+                    _M + "_stats_pandas_udfs:poisson_cdf_udf"),
+    "inverse_beta_cdf": ("a DOUBLE, b DOUBLE, p DOUBLE", "DOUBLE",
+                         "MathFunctions.java inverseBetaCdf",
+                         _M + "_stats_pandas_udfs:inverse_beta_cdf_udf"),
+    "t_cdf": ("df DOUBLE, t DOUBLE", "DOUBLE", "MathFunctions.java tCdf",
+              _M + "_stats_pandas_udfs:t_cdf_udf"),
+    "inverse_t_cdf": ("df DOUBLE, p DOUBLE", "DOUBLE",
+                      "MathFunctions.java inverseTCdf",
+                      _M + "_stats_pandas_udfs:inverse_t_cdf_udf"),
+    "inverse_chi_squared_cdf": (
+        "df DOUBLE, p DOUBLE", "DOUBLE",
+        "MathFunctions.java inverseChiSquaredCdf",
+        _M + "_stats_pandas_udfs:inverse_chi_squared_cdf_udf"),
+    "inverse_gamma_cdf": ("shape DOUBLE, scale DOUBLE, p DOUBLE", "DOUBLE",
+                          "MathFunctions.java inverseGammaCdf",
+                          _M + "_stats_pandas_udfs:inverse_gamma_cdf_udf"),
+    "inverse_f_cdf": ("d1 DOUBLE, d2 DOUBLE, p DOUBLE", "DOUBLE",
+                      "MathFunctions.java inverseFCdf",
+                      _M + "_stats_pandas_udfs:inverse_f_cdf_udf"),
+    "inverse_poisson_cdf": ("lam DOUBLE, p DOUBLE", "BIGINT",
+                            "MathFunctions.java inversePoissonCdf",
+                            _M + "_stats_pandas_udfs:inverse_poisson_cdf_udf"),
+    "inverse_binomial_cdf": (
+        "n BIGINT, pr DOUBLE, p DOUBLE", "BIGINT",
+        "MathFunctions.java inverseBinomialCdf",
+        _M + "_stats_pandas_udfs:inverse_binomial_cdf_udf"),
+    # ---- binary tail (HmacFunctions.java; VarbinaryFunctions
+    # .java:250-307): no JVM builtins exist; pinned against the
+    # reference's own test vectors (TestVarbinaryFunctions.java) ----
+    "hmac_md5": ("msg BINARY, key BINARY", "BINARY",
+                 "HmacFunctions.java hmacMd5",
+                 _M + "_binary_pandas_udfs:hmac_md5_udf"),
+    "hmac_sha1": ("msg BINARY, key BINARY", "BINARY",
+                  "HmacFunctions.java hmacSha1",
+                  _M + "_binary_pandas_udfs:hmac_sha1_udf"),
+    "hmac_sha256": ("msg BINARY, key BINARY", "BINARY",
+                    "HmacFunctions.java hmacSha256",
+                    _M + "_binary_pandas_udfs:hmac_sha256_udf"),
+    "hmac_sha512": ("msg BINARY, key BINARY", "BINARY",
+                    "HmacFunctions.java hmacSha512",
+                    _M + "_binary_pandas_udfs:hmac_sha512_udf"),
+    "murmur3_x64_128": ("b BINARY", "BINARY",
+                        "VarbinaryFunctions.java murmur3X64128",
+                        _M + "_binary_pandas_udfs:murmur3_x64_128_udf"),
+    "to_ieee754_32": ("x FLOAT", "BINARY",
+                      "VarbinaryFunctions.java toIEEE754Binary32",
+                      _M + "_binary_pandas_udfs:to_ieee754_32_udf"),
+    "from_ieee754_32": ("b BINARY", "FLOAT",
+                        "VarbinaryFunctions.java fromIEEE754Binary32",
+                        _M + "_binary_pandas_udfs:from_ieee754_32_udf"),
+    "to_ieee754_64": ("x DOUBLE", "BINARY",
+                      "VarbinaryFunctions.java toIEEE754Binary64",
+                      _M + "_binary_pandas_udfs:to_ieee754_64_udf"),
+    "from_ieee754_64": ("b BINARY", "DOUBLE",
+                        "VarbinaryFunctions.java fromIEEE754Binary64",
+                        _M + "_binary_pandas_udfs:from_ieee754_64_udf"),
+    "to_base32": ("b BINARY", "STRING", "VarbinaryFunctions.java toBase32",
+                  _M + "_binary_pandas_udfs:to_base32_udf"),
+    "from_base32": ("s STRING", "BINARY",
+                    "VarbinaryFunctions.java fromBase32",
+                    _M + "_binary_pandas_udfs:from_base32_udf"),
+    "spooky_hash_v2_32": ("b BINARY", "BINARY",
+                          "VarbinaryFunctions.java spookyHashV2_32",
+                          _M + "_binary_pandas_udfs:spooky_hash_v2_32_udf"),
+    "spooky_hash_v2_64": ("b BINARY", "BINARY",
+                          "VarbinaryFunctions.java spookyHashV2_64",
+                          _M + "_binary_pandas_udfs:spooky_hash_v2_64_udf"),
+    "fnv1_32": ("b BINARY", "INT", "VarbinaryFunctions.java fnv1Hash32",
+                _M + "_binary_pandas_udfs:fnv1_32_udf"),
+    "fnv1_64": ("b BINARY", "BIGINT", "VarbinaryFunctions.java fnv1Hash64",
+                _M + "_binary_pandas_udfs:fnv1_64_udf"),
+    "fnv1a_32": ("b BINARY", "INT", "VarbinaryFunctions.java fnv1aHash32",
+                 _M + "_binary_pandas_udfs:fnv1a_32_udf"),
+    "fnv1a_64": ("b BINARY", "BIGINT", "VarbinaryFunctions.java fnv1aHash64",
+                 _M + "_binary_pandas_udfs:fnv1a_64_udf"),
+}
 
 
-def register_geo_sql_functions(spark: SparkSession) -> list[str]:
-    """Register the geospatial SQL surface (ingest/emit/relate tier,
-    DE-9IM predicates, measures + SPHERICAL_GEOGRAPHY spellings).
-
-    Split out of register_functions (round 12): ~20 SQL temp
-    functions, several with multi-KB fold bodies, measurably slow
-    Spark's per-iteration analysis of UNRELATED iterative queries
-    (WITH RECURSIVE re-analyzes per UnionLoop step; the recursive
-    bench rows regressed ~40% with the tier registered).  The Engine
-    facade registers it always (full SQL surface); registry rows that
-    run geo SQL text call this explicitly; everything else skips the
-    analyzer drag.  Memoized via a flag attribute stashed on the
-    session object itself — an id(spark) key in a module-global set
-    can collide when a stopped session's address is reused by a new
-    one, silently skipping registration (ADVICE r12); the attribute
-    dies with the session it marks.
-    """
-    if getattr(spark, "_presto_spark_geo_sql_ready", False):
-        return []
-    spark._presto_spark_geo_sql_ready = True
-    registered: list[str] = []
-    # Geospatial SQL spellings (round 12, VERDICT r11 next-round #8):
-    # the reference surface is SQL, so the ingest/emit/relate tier —
-    # already Arrow-batched UDFs — registers under its Presto names,
-    # and the DE-9IM predicates become SQL UDFs doing one regex scan
-    # over the matrix string (one Arrow call per pair regardless of
-    # which predicate is asked).  Measures/overlay/accessors remain
-    # DataFrame-level (functions/geo.py Column builders — a SQL-text
-    # duplicate of those expressions would be a second engine;
-    # documented tier split in COVERAGE.md).  The struct→coordinate
-    # decomposition happens in the SQL wrapper bodies because ragged
-    # array<array<struct>> pandas-UDF inputs trip the Arrow converter.
-    from presto_spark.functions import _geo_pandas_udfs as _gpu
-    from presto_spark.functions.geo_relate import _relate_udf as _gru
-
-    spark.udf.register("st_geometryfromtext", _gpu.parse_wkt_full_udf)
-    spark.udf.register("st_geomfrombinary", _gpu.parse_wkb_udf)
-    spark.udf.register("__st_asbinary3", _gpu.as_wkb_udf)
-    spark.udf.register("__st_relate_matrix6", _gru)
-    registered += ["st_geometryfromtext", "st_geomfrombinary"]
-    _GEO_T = ("STRUCT<kind: STRING, "
-              "rings: ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>>")
-    _XS = "transform(g.rings, r -> transform(r, p -> p.x))"
-    _YS = "transform(g.rings, r -> transform(r, p -> p.y))"
-    _M = ("__st_relate_matrix6(a.kind, "
-          "transform(a.rings, r -> transform(r, p -> p.x)), "
-          "transform(a.rings, r -> transform(r, p -> p.y)), "
-          "b.kind, "
-          "transform(b.rings, r -> transform(r, p -> p.x)), "
-          "transform(b.rings, r -> transform(r, p -> p.y)))")
-    _DIM = ("CASE WHEN {0}.kind IN ('POINT', 'MULTIPOINT') THEN 0 "
-            "WHEN {0}.kind IN ('LINESTRING', 'MULTILINESTRING') THEN 1 "
-            "WHEN {0}.kind IN ('POLYGON', 'MULTIPOLYGON') THEN 2 END")
-    _AB = f"a {_GEO_T}, b {_GEO_T}"
+def _geo_shims(geo_t: str) -> dict[str, Shim]:
+    """The geospatial SQL surface: the ingest/emit/relate UDFs under
+    their Presto names and the DE-9IM predicates as SQL bodies doing one
+    regex scan over the relate matrix (one Arrow call per pair whichever
+    predicate is asked).  Measures/overlay/accessors stay DataFrame-level
+    Column builders (functions/geo.py) apart from the measure spellings
+    of functions/geo_sql_measures.py.  The struct→coordinate
+    decomposition happens in the SQL bodies because ragged
+    array<array<struct>> pandas-UDF inputs trip the Arrow converter."""
+    rings = "ARRAY<ARRAY<DOUBLE>>"
+    coords = f"kind STRING, xs {rings}, ys {rings}"
+    out = {
+        "st_geometryfromtext": Shim(
+            "wkt STRING", geo_t, None, "GeoFunctions.java stGeometryFromText",
+            _M + "_geo_pandas_udfs:parse_wkt_full_udf"),
+        "st_geomfrombinary": Shim(
+            "wkb BINARY", geo_t, None, "GeoFunctions.java stGeomFromBinary",
+            _M + "_geo_pandas_udfs:parse_wkb_udf"),
+        "__st_asbinary3": Shim(
+            coords, "BINARY", None, "GeoFunctions.java stAsBinary",
+            _M + "_geo_pandas_udfs:as_wkb_udf"),
+        "__st_relate_matrix6": Shim(
+            f"akind STRING, axs {rings}, ays {rings}, "
+            f"bkind STRING, bxs {rings}, bys {rings}", "STRING", None,
+            "GeoFunctions.java stRelate (DE-9IM matrix)",
+            _M + "geo_relate:_relate_udf"),
+    }
+    xs = "transform(g.rings, r -> transform(r, p -> p.x))"
+    ys = "transform(g.rings, r -> transform(r, p -> p.y))"
+    m = ("__st_relate_matrix6(a.kind, "
+         "transform(a.rings, r -> transform(r, p -> p.x)), "
+         "transform(a.rings, r -> transform(r, p -> p.y)), "
+         "b.kind, "
+         "transform(b.rings, r -> transform(r, p -> p.x)), "
+         "transform(b.rings, r -> transform(r, p -> p.y)))")
+    dim = ("CASE WHEN {0}.kind IN ('POINT', 'MULTIPOINT') THEN 0 "
+           "WHEN {0}.kind IN ('LINESTRING', 'MULTILINESTRING') THEN 1 "
+           "WHEN {0}.kind IN ('POLYGON', 'MULTIPOLYGON') THEN 2 END")
+    ab = f"a {geo_t}, b {geo_t}"
     for name, args, ret, body in (
         # "__st_asbinary": the bare name is a Spark 4.1 builtin (for
         # Spark's native GEOMETRY type); dialect.py renames the Presto
         # spelling to this wrapper
-        ("__st_asbinary", f"g {_GEO_T}", "BINARY",
-         f"__st_asbinary3(g.kind, {_XS}, {_YS})"),
-        ("st_point", "x DOUBLE, y DOUBLE", _GEO_T,
+        ("__st_asbinary", f"g {geo_t}", "BINARY",
+         f"__st_asbinary3(g.kind, {xs}, {ys})"),
+        ("st_point", "x DOUBLE, y DOUBLE", geo_t,
          "named_struct('kind', 'POINT', 'rings', "
          "array(array(named_struct('x', x, 'y', y))))"),
-        ("st_x", f"g {_GEO_T}", "DOUBLE",
+        ("st_x", f"g {geo_t}", "DOUBLE",
          "CASE WHEN g.kind = 'POINT' THEN g.rings[0][0].x END"),
-        ("st_y", f"g {_GEO_T}", "DOUBLE",
+        ("st_y", f"g {geo_t}", "DOUBLE",
          "CASE WHEN g.kind = 'POINT' THEN g.rings[0][0].y END"),
-        ("st_geometrytype", f"g {_GEO_T}", "STRING",
+        ("st_geometrytype", f"g {geo_t}", "STRING",
          "CASE g.kind WHEN 'POINT' THEN 'ST_Point' "
          "WHEN 'MULTIPOINT' THEN 'ST_MultiPoint' "
          "WHEN 'LINESTRING' THEN 'ST_LineString' "
@@ -1251,77 +1303,112 @@ def register_geo_sql_functions(spark: SparkSession) -> list[str]:
         # (pattern positions: II IB IE BI BB BE EI EB EE)
         # malformed (non-NULL, not 9 chars over TF012*) patterns RAISE
         # like the reference's Esri relate(); NULL pattern stays NULL
-        ("st_relate", f"{_AB}, p STRING", "BOOLEAN",
+        ("st_relate", f"{ab}, p STRING", "BOOLEAN",
          "CASE WHEN p IS NULL THEN CAST(NULL AS BOOLEAN) "
          "WHEN p RLIKE '^[TF012*]{9}$' THEN "
-         f"{_M} RLIKE "
+         f"{m} RLIKE "
          "concat('^', replace(replace(p, 'T', '[012]'), '*', '.'), '$') "
          "ELSE CAST(raise_error(concat('Invalid DE-9IM pattern: ', p)) "
          "AS BOOLEAN) END"),
-        ("st_touches", _AB, "BOOLEAN",
-         f"{_M} RLIKE '^F([^F]|..[^F]|...[^F])'"),
-        ("st_disjoint", _AB, "BOOLEAN", f"{_M} RLIKE '^FF.FF'"),
-        ("st_equals", _AB, "BOOLEAN", f"{_M} RLIKE '^[^F].F..FFF'"),
-        ("st_contains", _AB, "BOOLEAN", f"{_M} RLIKE '^[^F].{{5}}FF'"),
-        ("st_within", _AB, "BOOLEAN", f"{_M} RLIKE '^[^F].F..F'"),
-        ("st_intersects", _AB, "BOOLEAN", f"NOT ({_M} RLIKE '^FF.FF')"),
+        ("st_touches", ab, "BOOLEAN",
+         f"{m} RLIKE '^F([^F]|..[^F]|...[^F])'"),
+        ("st_disjoint", ab, "BOOLEAN", f"{m} RLIKE '^FF.FF'"),
+        ("st_equals", ab, "BOOLEAN", f"{m} RLIKE '^[^F].F..FFF'"),
+        ("st_contains", ab, "BOOLEAN", f"{m} RLIKE '^[^F].{{5}}FF'"),
+        ("st_within", ab, "BOOLEAN", f"{m} RLIKE '^[^F].F..F'"),
+        ("st_intersects", ab, "BOOLEAN", f"NOT ({m} RLIKE '^FF.FF')"),
         # NULL/collection inputs have NULL dims — lead with the NULL
         # guard so the ELSE-false arms can't turn NULL into false
         # (dims are plain CASE expressions, so the guard costs no
         # extra matrix UDF call)
-        ("st_crosses", _AB, "BOOLEAN",
-         f"CASE WHEN ({_DIM.format('a')}) IS NULL "
-         f"OR ({_DIM.format('b')}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-         f"WHEN ({_DIM.format('a')}) < ({_DIM.format('b')}) "
-         f"THEN {_M} RLIKE '^[^F].[^F]' "
-         f"WHEN ({_DIM.format('a')}) > ({_DIM.format('b')}) "
-         f"THEN {_M} RLIKE '^[^F].{{5}}[^F]' "
-         f"WHEN ({_DIM.format('a')}) = 1 AND ({_DIM.format('b')}) = 1 "
-         f"THEN substring({_M}, 1, 1) = '0' ELSE false END"),
-        ("st_overlaps", _AB, "BOOLEAN",
-         f"CASE WHEN ({_DIM.format('a')}) IS NULL "
-         f"OR ({_DIM.format('b')}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-         f"WHEN ({_DIM.format('a')}) != ({_DIM.format('b')}) "
+        ("st_crosses", ab, "BOOLEAN",
+         f"CASE WHEN ({dim.format('a')}) IS NULL "
+         f"OR ({dim.format('b')}) IS NULL THEN CAST(NULL AS BOOLEAN) "
+         f"WHEN ({dim.format('a')}) < ({dim.format('b')}) "
+         f"THEN {m} RLIKE '^[^F].[^F]' "
+         f"WHEN ({dim.format('a')}) > ({dim.format('b')}) "
+         f"THEN {m} RLIKE '^[^F].{{5}}[^F]' "
+         f"WHEN ({dim.format('a')}) = 1 AND ({dim.format('b')}) = 1 "
+         f"THEN substring({m}, 1, 1) = '0' ELSE false END"),
+        ("st_overlaps", ab, "BOOLEAN",
+         f"CASE WHEN ({dim.format('a')}) IS NULL "
+         f"OR ({dim.format('b')}) IS NULL THEN CAST(NULL AS BOOLEAN) "
+         f"WHEN ({dim.format('a')}) != ({dim.format('b')}) "
          "THEN false "
-         f"WHEN ({_DIM.format('a')}) = 1 "
-         f"THEN {_M} RLIKE '^1.[^F].{{3}}[^F]' "
-         f"ELSE {_M} RLIKE '^[^F].[^F].{{3}}[^F]' END"),
+         f"WHEN ({dim.format('a')}) = 1 "
+         f"THEN {m} RLIKE '^1.[^F].{{3}}[^F]' "
+         f"ELSE {m} RLIKE '^[^F].[^F].{{3}}[^F]' END"),
     ):
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    # Measure tier + SPHERICAL_GEOGRAPHY SQL spellings (round 12,
-    # VERDICT r11 #8): hand-transliterated twins of the Column folds,
-    # bit-parity-pinned by tests/test_geo_sql_measures.py.
-    from presto_spark.functions.geo_sql_measures import sql_measure_udfs
-
-    for name, (args, ret, body) in sql_measure_udfs().items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    return registered
+        out[name] = Shim(args, ret, body, f"GeoFunctions.java {name}")
+    return out
 
 
-def register_llm_sql_functions(spark: SparkSession) -> list[str]:
-    """Register the LLM scalar tier's SQL spellings (round 14, VERDICT
-    r13 next-round #3): poly_hash/fingerprint, simhash16,
-    split_bucket, html_to_text, quality_score — the north-star
-    operators a SQL-first user needs without dropping to the
-    DataFrame API.
-
-    Same lazy split as register_geo_sql_functions (the simhash body
-    unrolls 16 aggregate folds — analyzer drag for unrelated
-    iterative queries if always-registered): the Engine facade
-    registers it always, registry rows that run the SQL names call
-    this explicitly, everything else skips it.  Memoized via a
-    session attribute (not id(spark) — address reuse, ADVICE r12).
-    """
-    if getattr(spark, "_presto_spark_llm_sql_ready", False):
-        return []
-    spark._presto_spark_llm_sql_ready = True
+@functools.cache
+def shims() -> dict[str, Shim]:
+    """The one table of compat shims, in registration order: a body
+    calls only shims listed before it, because Spark resolves a SQL
+    function's body when the function is created."""
+    from presto_spark.functions.color import COLOR_UDFS
+    from presto_spark.functions.geo_sql_measures import GEO_T, sql_measure_udfs
     from presto_spark.functions.llm_sql import llm_sql_udfs
 
-    registered: list[str] = []
-    for name, (args, ret, body) in llm_sql_udfs().items():
-        spark.sql(_ddl(name, args, ret, body))
-        registered.append(name)
-    return registered
+    table = {n: Shim(*t) for n, t in _SQL_UDFS.items()}
+    table.update((n, Shim(a, r, b, "BitwiseFunctions.java"))
+                 for n, (a, r, b) in BITWISE_UDFS.items())
+    # color/bar terminal rendering (ColorFunctions.java)
+    table.update((n, Shim(*t)) for n, t in COLOR_UDFS.items())
+    table.update((n, Shim(a, r, None, c, u))
+                 for n, (a, r, c, u) in _PY_UDFS.items())
+    table.update(_geo_shims(GEO_T))
+    # measures + SPHERICAL_GEOGRAPHY spellings: transliterated twins of
+    # the Column folds, bit-parity-pinned by tests/test_geo_sql_measures.py
+    table.update((n, Shim(a, r, b, "GeoFunctions.java / "
+                          "SphericalGeoFunctions.java " + n))
+                 for n, (a, r, b) in sql_measure_udfs().items())
+    table.update((n, Shim(a, r, b, "LLM scalar tier (functions/llm_sql.py)"))
+                 for n, (a, r, b) in llm_sql_udfs().items())
+    return {n: s._replace(calls=frozenset(_called(s.body) & table.keys() - {n}))
+            if s.body else s for n, s in table.items()}
 
+
+def _ddl(name: str, args: str, ret: str, body: str) -> str:
+    return (f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
+            f"RETURNS {ret} RETURN {body}")
+
+
+def register_functions(spark: SparkSession, *texts: str) -> list[str]:
+    """Register into ``spark`` the shims that ``texts`` call, plus the
+    shims those bodies call; return the names registered, in table
+    order.
+
+    A shim is called where its name is written as ``name(``.  Shims the
+    session already has are skipped: the record is an attribute of the
+    session object, so it dies with the session.  With no text nothing
+    is registered.  Failures raise — a shim that silently failed to
+    register would surface as a confusing error at query time.
+    """
+    table = shims()
+    want = set().union(*map(_called, texts)) & table.keys()
+    todo = list(want)
+    while todo:
+        for dep in table[todo.pop()].calls - want:
+            want.add(dep)
+            todo.append(dep)
+    done = vars(spark).setdefault("_presto_spark_shims", set())
+    new = [n for n in table if n in want and n not in done]
+    for name in new:
+        s = table[name]
+        if s.body is not None:
+            spark.sql(_ddl(name, s.args, s.ret, s.body))
+        else:
+            module, attr = s.udf.split(":")
+            spark.udf.register(
+                name, getattr(importlib.import_module(module), attr))
+        done.add(name)
+    return new
+
+
+def run_sql(spark: SparkSession, text: str) -> DataFrame:
+    """``spark.sql(text)`` with the shims ``text`` calls registered."""
+    register_functions(spark, text)
+    return spark.sql(text)

@@ -2242,11 +2242,10 @@ ORDER BY metric, k
     tags=("geo", "functions", "dialect"),
 )
 def geo_sql_measures_golden(spark, sf_dir):
-    from presto_spark.functions.registry import register_geo_sql_functions
+    from presto_spark.functions.registry import run_sql
 
     prepare(spark, sf_dir)
-    register_geo_sql_functions(spark)
-    return spark.sql(_SQL_MEASURES_TEXT)
+    return run_sql(spark, _SQL_MEASURES_TEXT)
 
 
 _RELATE_COLLECTIONS_ORACLE = """

@@ -1699,7 +1699,7 @@ def llm_html_extract(spark, sf_dir):
     FROM stats ORDER BY doc_id
     """,
     doc="SQL spellings of the LLM scalar tier (functions/llm_sql.py, "
-        "registered via registry.register_llm_sql_functions — round "
+        "registered on demand by registry.register_functions — round "
         "14, VERDICT r13 next-round #3: the north-star operators were "
         "DataFrame-only, unreachable from engine.sql): ONE spark.sql "
         "text exercises poly_hash/fingerprint (31-base char fold), "
@@ -1714,11 +1714,10 @@ def llm_html_extract(spark, sf_dir):
     tags=("llm", "text", "dialect", "bench"),
 )
 def llm_sql_spellings(spark, sf_dir):
-    from presto_spark.functions.registry import register_llm_sql_functions
+    from presto_spark.functions.registry import run_sql
 
     prepare(spark, sf_dir)
-    register_llm_sql_functions(spark)
-    return spark.sql("""
+    return run_sql(spark, """
         SELECT doc_id,
                poly_hash(text) AS ph,
                fingerprint(text) AS fp,

@@ -17,6 +17,7 @@ features, so OLS recovers it to < 1e-6.
 
 from pyspark.sql import functions as F
 
+from presto_spark.functions.registry import register_functions
 from presto_spark.operators import ml
 from presto_spark.queries.base import prepare, register
 
@@ -47,6 +48,10 @@ SELECT CAST(121 AS BIGINT) AS n,
 )
 def ml_learn_classify_golden(spark, sf_dir):
     prepare(spark, sf_dir)
+    classify, regress, classify_varchar = (
+        "classify(f, model)", "regress(f, model)",
+        "classify_varchar(f, model)")
+    register_functions(spark, classify, regress, classify_varchar)
     k = F.col("c_custkey")
     feats = F.create_map(
         F.lit(0).cast("long"),
@@ -64,7 +69,7 @@ def ml_learn_classify_golden(spark, sf_dir):
     model = ml.learn_classifier(base, "label", "f")
     scored = base.crossJoin(F.broadcast(model)).select(
         "id", "label", "label_s", "f",
-        F.expr("classify(f, model)").alias("pred"))
+        F.expr(classify).alias("pred"))
     stats = scored.agg(
         F.count("*").cast("bigint").alias("n"))
     report = ml.evaluate_classifier_predictions(
@@ -88,14 +93,14 @@ def ml_learn_classify_golden(spark, sf_dir):
     )
     rmodel = ml.learn_regressor(reg_base, "y", "f")
     reg_ok = reg_base.crossJoin(F.broadcast(rmodel)).agg(
-        (F.max(F.abs(F.expr("regress(f, model)") - F.col("y")))
+        (F.max(F.abs(F.expr(regress) - F.col("y")))
          < 1e-6).alias("reg_exact"))
 
     vmodel = ml.learn_varchar_classifier(base, "label_s", "f")
     vcounts = base.crossJoin(F.broadcast(vmodel)).agg(
-        F.sum((F.expr("classify_varchar(f, model)") == "0")
+        F.sum((F.expr(classify_varchar) == "0")
               .cast("bigint")).cast("bigint").alias("v0"),
-        F.sum((F.expr("classify_varchar(f, model)") == "1")
+        F.sum((F.expr(classify_varchar) == "1")
               .cast("bigint")).cast("bigint").alias("v1"))
 
     return (stats.crossJoin(report).crossJoin(reg_ok)

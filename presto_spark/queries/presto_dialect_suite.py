@@ -10,13 +10,14 @@ written directly in DuckDB's dialect.
 from pyspark.sql import SparkSession
 
 from presto_spark.functions.dialect import translate
+from presto_spark.functions.registry import run_sql
 from presto_spark.queries.base import prepare, register
 
 
 def _presto_sql(name, presto_text, duck_text, doc, tags):
     def fn(spark: SparkSession, sf_dir: str):
         prepare(spark, sf_dir)
-        return spark.sql(translate(presto_text))
+        return run_sql(spark, translate(presto_text))
 
     fn.__name__ = name
     register(name, oracle=duck_text, doc=doc, tags=tags)(fn)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from presto_spark.functions.registry import run_sql, shims
 from presto_spark.prepared import presto_type_name
 
 SHOW_FUNCTIONS_RE = re.compile(
@@ -57,45 +58,6 @@ def _like_to_regex(pat: str) -> re.Pattern[str]:
             out.append(re.escape(c))
     return re.compile("^" + "".join(out) + "$", re.IGNORECASE)
 
-
-# Arrow-batched shims registered via spark.udf.register carry no SQL
-# signature metadata, so SHOW FUNCTIONS lists them from this table
-# (signatures mirror the reference functions they reproduce).
-_PANDAS_SHIMS: dict[str, tuple[str, str, str]] = {
-    "word_stem": ("varchar", "varchar",
-                  "WordStemFunction.java (Porter stemmer)"),
-    "jarowinkler_similarity": ("varchar, varchar", "double",
-                               "StringFunctions.java jaroWinklerSimilarity"),
-    "normalize": ("varchar, varchar", "varchar",
-                  "StringFunctions.java normalize (NFC/NFD/NFKC/NFKD)"),
-    "beta_cdf": ("double, double, double", "double",
-                 "MathFunctions.java betaCdf"),
-    "binomial_cdf": ("bigint, double, bigint", "double",
-                     "MathFunctions.java binomialCdf"),
-    "chi_squared_cdf": ("double, double", "double",
-                        "MathFunctions.java chiSquaredCdf"),
-    "f_cdf": ("double, double, double", "double",
-              "MathFunctions.java fCdf"),
-    "gamma_cdf": ("double, double, double", "double",
-                  "MathFunctions.java gammaCdf"),
-    "poisson_cdf": ("double, bigint", "double",
-                    "MathFunctions.java poissonCdf"),
-    "t_cdf": ("double, double", "double", "MathFunctions.java tCdf"),
-    "inverse_beta_cdf": ("double, double, double", "double",
-                         "MathFunctions.java inverseBetaCdf"),
-    "inverse_chi_squared_cdf": ("double, double", "double",
-                                "MathFunctions.java inverseChiSquaredCdf"),
-    "inverse_gamma_cdf": ("double, double, double", "double",
-                          "MathFunctions.java inverseGammaCdf"),
-    "inverse_f_cdf": ("double, double, double", "double",
-                      "MathFunctions.java inverseFCdf"),
-    "inverse_poisson_cdf": ("double, double", "bigint",
-                            "MathFunctions.java inversePoissonCdf"),
-    "inverse_binomial_cdf": ("bigint, double, double", "bigint",
-                             "MathFunctions.java inverseBinomialCdf"),
-    "inverse_t_cdf": ("double, double", "double",
-                      "MathFunctions.java inverseTCdf"),
-}
 
 # Presto spellings the dialect layer rewrites in-place rather than
 # registering (Spark builtin collisions / grammar forms) — listed so
@@ -170,8 +132,7 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
     Types, Function Type, Deterministic, Description
     (ShowQueriesRewrite.java; registry spec
     BuiltInTypeAndFunctionNamespaceManager.java:525)."""
-    from presto_spark.functions.dialect import _SIMPLE_MAP, BITWISE_UDFS
-    from presto_spark.functions.registry import _SQL_UDFS
+    from presto_spark.functions.dialect import _SIMPLE_MAP
 
     rows: list[tuple[str, str, str, str, bool, str]] = []
     seen: set[str] = set()
@@ -182,13 +143,14 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
         seen.add(name)
         rows.append((name, ret, args, ftype, True, desc))
 
-    for name, (args, ret, _body, cite) in _SQL_UDFS.items():
-        add(name, _presto_spell(ret), _sig_arg_types(args), "scalar", cite)
-    for name, (args, ret, _body) in BITWISE_UDFS.items():
-        add(name, _presto_spell(ret), _sig_arg_types(args), "scalar",
-            "BitwiseFunctions.java")
-    for name, (args, ret, desc) in _PANDAS_SHIMS.items():
-        add(name, ret, args, "scalar", desc)
+    # Every shim, registered in this session or not: the registry
+    # registers on demand, so the catalog lists only the ones used so
+    # far.  "__" helpers and "_py" per-row plumbing are not user surface.
+    table = shims()
+    for name, s in table.items():
+        if not (name.startswith("__") or name.endswith("_py")):
+            add(name, _presto_spell(s.ret), _sig_arg_types(s.args),
+                "scalar", s.cite)
     for name, target in _SIMPLE_MAP.items():
         add(name, "", "", "scalar", f"dialect rename -> {target}")
     for name, (args, ret, desc) in _DIALECT_SPELLINGS.items():
@@ -196,9 +158,8 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
     # Spark builtins round out the callable surface; the catalog exposes
     # name/description only (no typed signatures), mirrored as-is.
     for fn in spark.catalog.listFunctions():
-        if fn.name.endswith("_py"):
-            continue  # internal per-row plumbing, not user surface
-        add(fn.name, "", "", "scalar", fn.description or "")
+        if fn.name not in table:
+            add(fn.name, "", "", "scalar", fn.description or "")
 
     if like is not None:
         rx = _like_to_regex(like)
@@ -351,6 +312,6 @@ def route(spark: SparkSession, query: str,
             inner = m.group(2)
             if translate_fn is not None:
                 inner = translate_fn(inner)
-            target = spark.sql(inner)
+            target = run_sql(spark, inner)
         return show_stats(spark, target)
     return None

@@ -22,6 +22,14 @@ def spark():
     yield s
 
 
+def register_every_shim(spark):
+    """Register the whole compat-shim table into ``spark``, for tests
+    that call shims through raw ``spark.sql`` text."""
+    from presto_spark.functions.registry import register_functions, shims
+
+    return register_functions(spark, *(f"{name}()" for name in shims()))
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -44,3 +44,11 @@ def test_configure_restores_engine_conf(spark):
             assert spark.conf.get(k) == v, k
         finally:
             spark.conf.set(k, before)
+
+
+def test_new_session_carries_engine_conf(spark):
+    """newSession copies the SparkConf get_spark built with, so a
+    per-row session (tools/diffcheck.py) keeps the engine semantics."""
+    s = spark.newSession()
+    for k, v in ENGINE_CONF.items():
+        assert s.conf.get(k) == v, k

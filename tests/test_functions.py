@@ -12,13 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from presto_spark.functions.dialect import translate
+from presto_spark.functions.registry import run_sql
 from presto_spark.queries.base import prepare
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, register_every_shim
 
 
 @pytest.fixture(scope="module", autouse=True)
 def _prep(spark):
+    # the tests below call shims through raw spark.sql text
     prepare(spark, SF_DIR)
+    register_every_shim(spark)
 
 
 def one(spark, expr):
@@ -1002,10 +1005,8 @@ def test_teradata_functions_end_to_end(spark):
 def test_binary_tail_reference_vectors(spark):
     """Byte-for-byte parity with the reference's test vectors
     (TestVarbinaryFunctions.java:348-349, :475-477)."""
-    from presto_spark.functions.registry import register_functions
-
-    register_functions(spark)
-    row = spark.sql(
+    row = run_sql(
+        spark,
         "SELECT upper(hex(hmac_md5(encode('hashme','UTF-8'), "
         "encode('key','UTF-8')))) AS h, "
         "upper(hex(murmur3_x64_128(encode('hashme','UTF-8')))) AS m, "
@@ -1019,12 +1020,9 @@ def test_binary_tail_reference_vectors(spark):
 
 
 def test_from_ieee754_wrong_length_raises(spark):
-    from presto_spark.functions.registry import register_functions
-
-    register_functions(spark)
     with pytest.raises(Exception, match="exactly 8 bytes"):
-        spark.sql(
-            "SELECT from_ieee754_64(encode('abc', 'UTF-8'))").collect()
+        run_sql(
+            spark, "SELECT from_ieee754_64(encode('abc', 'UTF-8'))").collect()
 
 
 def test_map_lambda_predicates_through_engine(spark):
@@ -1213,10 +1211,7 @@ def test_color_bar_tier(spark):
     """ColorFunctions.java tier (functions/color.py): parse/pack,
     HSB interpolation reference vectors (red→green midpoint is
     yellow), ANSI escape assembly, bar clamping."""
-    from presto_spark.functions.registry import register_functions
-
-    register_functions(spark)
-    r = spark.sql("""
+    r = run_sql(spark, """
       SELECT color('#abc') AS hex3,
              color('CYAN') AS cyan,
              color_interp(0.25, rgb(255,0,0), rgb(0,255,0)) AS quarter,

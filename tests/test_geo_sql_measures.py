@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from presto_spark.functions import geo as G
 from presto_spark.functions import geo_spherical as GS
 from presto_spark.functions.geo import st_geometry_from_text
-from presto_spark.functions.registry import (
-    register_functions, register_geo_sql_functions)
+from presto_spark.functions.geo_sql_measures import sql_measure_udfs
+from presto_spark.functions.registry import register_functions, run_sql
 
 # Sweep: every kind, degenerate shapes, CW/CCW rings, holes,
 # antimeridian-adjacent and polar coordinates.
@@ -50,8 +50,7 @@ SPH_LEN_KINDS = ("LINESTRING", "MULTILINESTRING")
 
 @pytest.fixture(scope="module")
 def geo_df(spark):
-    register_functions(spark)
-    register_geo_sql_functions(spark)
+    register_functions(spark, *(f"{name}()" for name in sql_measure_udfs()))
     wkts = WKTS + [POLAR_WKT]
     df = spark.createDataFrame([(w,) for w in wkts], "wkt string")
     return df.withColumn("g", st_geometry_from_text(F.col("wkt"))).cache()
@@ -175,9 +174,8 @@ def test_spherical_point_distance_parity(geo_df):
 
 
 def test_sql_roundtrip_and_null_propagation(spark):
-    register_functions(spark)
-    register_geo_sql_functions(spark)
-    row = spark.sql(
+    row = run_sql(
+        spark,
         "SELECT to_geometry(to_spherical_geography("
         "st_geometryfromtext('LINESTRING (0 0, 0 1)'))) AS rt, "
         "st_area(CAST(NULL AS STRUCT<kind: STRING, "
@@ -195,8 +193,6 @@ def test_sql_roundtrip_and_null_propagation(spark):
 
 
 def test_sql_raise_arms(spark):
-    register_functions(spark)
-    register_geo_sql_functions(spark)
     # coalesce(1) single-tasks the raise so a concurrently-cancelled
     # peer task can't win the race to the client (r11 deflake rule)
     for sql, msg in [
@@ -215,4 +211,4 @@ def test_sql_raise_arms(spark):
          "only supports LINE_STRING"),
     ]:
         with pytest.raises(Exception, match=msg):
-            spark.sql(sql).coalesce(1).collect()
+            run_sql(spark, sql).coalesce(1).collect()

@@ -124,10 +124,11 @@ def test_sql_spellings_match_column_tier_on_arbitrary_ascii(spark, texts):
     hypothesis ASCII (quotes, backslashes, angle brackets, entity
     fragments): any lexer-escape or transliteration drift shows here
     before it could show on corpus text."""
-    from presto_spark.functions.registry import register_llm_sql_functions
+    from presto_spark.functions.llm_sql import llm_sql_udfs
+    from presto_spark.functions.registry import register_functions
     from presto_spark.llm import dedup, text
 
-    register_llm_sql_functions(spark)
+    register_functions(spark, *(f"{name}()" for name in llm_sql_udfs()))
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "rid int, t string")
     got = df.select(

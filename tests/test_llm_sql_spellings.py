@@ -8,7 +8,8 @@ HTML, NULL)."""
 import pytest
 from pyspark.sql import functions as F
 
-from presto_spark.functions.registry import register_llm_sql_functions
+from presto_spark.functions.llm_sql import llm_sql_udfs
+from presto_spark.functions.registry import register_functions
 from presto_spark.llm import dedup, mix, text
 from tests.conftest import SF_DIR
 
@@ -20,7 +21,7 @@ EDGES = ["", "x", "one two three four", "  padded   whitespace  ",
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    register_llm_sql_functions(spark)
+    register_functions(spark, *(f"{name}()" for name in llm_sql_udfs()))
     docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
             .select("doc_id", "text").limit(40))
     edges = spark.createDataFrame(
@@ -72,8 +73,8 @@ def test_quality_score_parity(corpus):
 
 
 def test_sql_spellings_reachable_via_engine(spark):
-    """The facade registers the tier: engine.sql in the Presto dialect
-    reaches the names directly."""
+    """engine.sql registers the shims its text calls: the Presto
+    dialect reaches the names directly."""
     from presto_spark import Engine
 
     eng = Engine(spark, sf_dir=SF_DIR)
@@ -88,10 +89,11 @@ def test_sql_spellings_reachable_via_engine(spark):
 
 
 def test_registration_is_idempotent_per_session(spark):
-    """Second registration call is a memoized no-op (session-attribute
-    guard, not id(spark) — the geo tier's address-reuse lesson), and
-    the functions still resolve afterwards."""
-    first = register_llm_sql_functions(spark)  # may be [] if another
-    second = register_llm_sql_functions(spark)  # test registered first
-    assert second == []
-    assert spark.sql("SELECT poly_hash('abc') AS v").collect()[0].v > 0
+    """A second registration of the same text is a memoized no-op (the
+    record is a session attribute, not an id(spark) key, which a later
+    session can reuse), and the function still resolves afterwards."""
+    s = spark.newSession()
+    text = "SELECT poly_hash('abc') AS v"
+    assert register_functions(s, text) == ["poly_hash"]
+    assert register_functions(s, text) == []
+    assert s.sql(text).collect()[0].v > 0

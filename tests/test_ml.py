@@ -26,7 +26,7 @@ def _clusters(spark, n=60):
 def test_classifier_separable_is_exact(spark):
     from presto_spark.functions.registry import register_functions
 
-    register_functions(spark)
+    register_functions(spark, "classify(f, model)")
     base = _clusters(spark)
     model = ml.learn_classifier(base, "label", "f")
     scored = base.crossJoin(F.broadcast(model)).select(
@@ -38,7 +38,7 @@ def test_classifier_separable_is_exact(spark):
 def test_regressor_recovers_linear_target(spark):
     from presto_spark.functions.registry import register_functions
 
-    register_functions(spark)
+    register_functions(spark, "regress(f, model)")
     k = F.col("id")
     feats = F.create_map(
         F.lit(0).cast("long"), (k % 11).cast("double"),
@@ -90,7 +90,7 @@ def test_libsvm_spellings_accept_params(spark):
 
     from presto_spark.functions.registry import register_functions
 
-    register_functions(spark)
+    register_functions(spark, "classify(f, model)")
     base = _clusters(spark, n=40)
     m = ml.learn_libsvm_classifier(base, "label", "f", "-C 10 -t 0")
     blob = m.collect()[0].model

@@ -5,6 +5,11 @@ parquet tables and compares row count, column names, and an
 order-insensitive value hash (floats rounded to 9 significant-ish
 decimals to absorb representation noise in printing, not in value).
 
+Each row builds on its own ``spark.newSession()``, so a row that needs a
+compat shim some earlier row registered fails instead of passing by
+accident.  A new session shares the SparkContext and copies its
+SparkConf, which is where ``get_spark`` puts ``ENGINE_CONF``.
+
 Usage:  python tools/diffcheck.py [sf_dir] [name_substring...]
 """
 
@@ -63,7 +68,7 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = q.spark(spark, sf_dir)
+            sdf = q.spark(spark.newSession(), sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
