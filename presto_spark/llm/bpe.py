@@ -6,21 +6,18 @@ corpus and encode documents with them — Sennrich-style word-internal
 BPE (characters + an end-of-word marker, merges never cross word
 boundaries), the algorithm under GPT-2/RoBERTa-class vocabularies.
 
-Distributed design (the shape that survives 100 TB):
+Design:
 
 * The corpus collapses ONCE to a (word, count) vocabulary — one
-  map-side-combinable aggregation; afterwards every training round
-  touches only the vocab table (unique words ≪ corpus tokens), never
-  the corpus.  This mirrors how production tokenizer trainers work,
-  but keeps the vocab DISTRIBUTED — at web scale unique words are
-  hundreds of millions of rows, too big to collect.
-* Each merge round is: one weighted pair-count aggregation over the
-  vocab (explode of adjacent symbol pairs), one argmax (count desc,
-  then lexicographic pair — deterministic, engine-stable), and one
-  map-side fold applying the merge greedily left-to-right inside
-  each word.  Only the winning pair (a few bytes) reaches the
-  driver per round.  localCheckpoint every few rounds truncates the
-  growing lineage — the dedup_clusters discipline.
+  map-side-combinable Spark aggregation, the only corpus-sized work
+  in training.  Unique words are far fewer than corpus tokens, so the
+  vocabulary collects to the driver (a LIMIT n+1 collect bounded by
+  MAX_VOCAB_ROWS; a larger vocabulary raises) and the merge loop runs
+  in-process, the way HF/Sennrich trainers hold the word-count table
+  in memory.
+* Each merge round is one weighted pair count over the vocab, one
+  argmax (count desc, then lexicographic pair — deterministic), and
+  one greedy left-to-right fold applying the merge inside each word.
 * Encoding (apply_bpe) broadcasts the learned merge ranks (n_merges
   entries — KBs) and runs the standard lowest-rank-first merge loop
   per word in an Arrow-batched pandas iterator: Python is
@@ -54,51 +51,14 @@ def _initial_symbols(word: Column) -> Column:
     return F.concat(F.split(word, ""), F.array(F.lit(EOW)))
 
 
-def _merge_fold(symbols: Column, a: str, b: str) -> Column:
-    """Greedy left-to-right application of one merge (a, b) -> a+b
-    inside a symbol array — a single aggregate() fold carrying
-    (emitted, pending) state, so the whole round stays JVM-side."""
-    merged = a + b
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit("").alias("pend"),
-    )
-
-    def step(acc, s):
-        hit = (acc["pend"] == a) & (s == b)
-        return F.when(
-            hit,
-            F.struct(
-                F.concat(acc["out"], F.array(F.lit(merged))).alias("out"),
-                F.lit("").alias("pend"),
-            ),
-        ).otherwise(
-            F.struct(
-                F.when(acc["pend"] != "",
-                       F.concat(acc["out"], F.array(acc["pend"])))
-                .otherwise(acc["out"]).alias("out"),
-                s.alias("pend"),
-            )
-        )
-
-    def fin(acc):
-        return F.when(acc["pend"] != "",
-                      F.concat(acc["out"], F.array(acc["pend"]))
-                      ).otherwise(acc["out"])
-
-    return F.aggregate(symbols, init, step, fin)
-
-
 def _select_batch(
     head: list[tuple[str, str, int]],
     want: int,
     min_pair_count: int,
 ) -> list[tuple[str, str]]:
-    """Shared candidate-selection walk over a (count desc, a, b)-ordered
-    head: stop at the min-count floor or ``want`` picks, skip pairs
-    touching an already-used symbol (symbol-disjointness, see
-    train_bpe).  One implementation for the distributed and local
-    paths so the two cannot drift."""
+    """Candidate-selection walk over a (count desc, a, b)-ordered head:
+    stop at the min-count floor or ``want`` picks, skip pairs touching
+    an already-used symbol (symbol-disjointness, see train_bpe)."""
     used: set[str] = set()
     batch: list[tuple[str, str]] = []
     for a, b, c in head:
@@ -114,9 +74,11 @@ def _select_batch(
 
 
 def _fold_local(syms: list[str], a: str, b: str) -> list[str]:
-    """Python replica of _merge_fold's (out, pend) recurrence —
-    greedy left-to-right, same emit order, '' impossible as a symbol
-    so the pend sentinel is unambiguous."""
+    """Greedy left-to-right application of one merge (a, b) -> a+b
+    inside a symbol list: the (out, pend) recurrence the registry
+    row's SQL oracle replays (queries/llm.py duck_bpe_replay_sql);
+    '' is impossible as a symbol, so the pend sentinel is
+    unambiguous."""
     merged = a + b
     out: list[str] = []
     pend = ""
@@ -139,11 +101,11 @@ def _train_local(
     min_pair_count: int,
     batch_merges: int,
 ) -> list[tuple[str, str]]:
-    """The exact train_bpe loop over a driver-resident vocabulary:
-    same weighted pair counts, same (count desc, a, b) argmax over the
-    same 4x-slack head, same greedy fold — pure integer/string work,
-    so the merge list is identical to the distributed path's (pinned
-    by test_train_bpe_local_matches_distributed)."""
+    """The train_bpe merge loop over the collected vocabulary: weighted
+    pair counts, the (count desc, a, b) argmax over a 4x-slack head
+    (disjointness filtering skips some of it; selecting fewer than
+    ``want`` only costs a round), then the greedy fold — pure
+    integer/string work."""
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
         counts: dict[tuple[str, str], int] = {}
@@ -165,12 +127,10 @@ def _train_local(
     return merges
 
 
-# Vocabularies at or below this row count run the merge loop on the
-# driver (a few MB — the word-count table HF/Sennrich trainers hold in
-# memory anyway); larger vocabularies use the distributed loop.  The
-# probe is a LIMIT n+1 collect, so the driver never materializes more
-# than n+1 rows of a web-scale vocab.
-LOCAL_VOCAB_ROWS = 200_000
+# The most (word, count) rows train_bpe collects to the driver.  The
+# collect is LIMIT n+1, so the driver never holds more than n+1 rows
+# of a web-scale vocabulary; a larger vocabulary raises ValueError.
+MAX_VOCAB_ROWS = 200_000
 
 
 def train_bpe(
@@ -178,7 +138,6 @@ def train_bpe(
     n_merges: int,
     text_col: str = "text",
     min_pair_count: int = 2,
-    checkpoint_every: int = 8,
     batch_merges: int = 1,
 ) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` BPE merges from the corpus.
@@ -188,16 +147,19 @@ def train_bpe(
     across engines, partitionings, and cluster sizes.  Stops early
     when no pair reaches ``min_pair_count``.
 
+    The (word, count) vocabulary is collected to the driver with a
+    LIMIT n+1 bound; more than MAX_VOCAB_ROWS distinct words raise
+    ValueError.
+
     ``batch_merges`` bounds the round count for production vocabulary
     sizes.  The default (1) is the exact sequential Sennrich algorithm
-    — one Spark job per merge, fine for the hundreds of merges a test
-    needs but tens of thousands of sequential jobs at a GPT-2-class
-    50k vocabulary (days of scheduler overhead alone).  With
-    ``batch_merges = N`` each round selects up to N candidates in
-    (count desc, lexicographic) order that are pairwise SYMBOL-
-    DISJOINT and applies them in one pass, so training runs
-    ceil(n_merges / batch) rounds, each still one pair-count
-    aggregation + one fold job.  Symbol-disjointness makes the batch
+    — one full pass over the vocabulary per merge, fine for the
+    hundreds of merges a test needs but tens of thousands of passes at
+    a GPT-2-class 50k vocabulary.  With ``batch_merges = N`` each round
+    selects up to N candidates in (count desc, lexicographic) order
+    that are pairwise SYMBOL-DISJOINT and applies them in one pass, so
+    training runs ceil(n_merges / batch) rounds, each still one pair
+    count + one fold pass.  Symbol-disjointness makes the batch
     sound: applying (a, b) can only create pairs involving the new
     symbol ``ab`` and destroy pairs involving ``a`` or ``b``, so the
     counts the other selected pairs were ranked on are invariant
@@ -214,78 +176,23 @@ def train_bpe(
     reference algorithm bit-for-bit (the registry row's unrolled SQL
     oracle) uses the exact default.
     """
-    from presto_spark.operators.cte import (checkpoint_tracked,
-                                            release_checkpoints)
-
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive: {n_merges}")
     if batch_merges <= 0:
         raise ValueError(f"batch_merges must be positive: {batch_merges}")
-    spark = df.sparkSession
-    vocab, vocab_ids = checkpoint_tracked(
-        word_vocab(df, text_col).select(
-            _initial_symbols(F.col("word")).alias("syms"), "count"))
-    # Adaptive local fast path (optimization guide §1.2 "the
-    # distributed algorithm" + the AQE small-side pattern): after the
-    # one corpus-sized aggregation, the merge loop touches only the
-    # (word, count) vocabulary.  When that table is driver-sized, the
-    # remaining n_merges sequential Spark jobs are pure scheduler
-    # overhead — probe with LIMIT n+1 (bounded collect either way) and
-    # run the identical loop in-process.  Web-scale vocabularies
-    # (hundreds of millions of unique words) exceed the limit and stay
-    # on the distributed loop below.
-    head_rows = vocab.limit(LOCAL_VOCAB_ROWS + 1).collect()
-    if len(head_rows) <= LOCAL_VOCAB_ROWS:
-        release_checkpoints(spark, vocab_ids)
-        return _train_local(
-            [(list(r.syms), int(r["count"])) for r in head_rows],
-            n_merges, min_pair_count, batch_merges)
-    merges: list[tuple[str, str]] = []
-    since_ckpt = 0
-    try:
-        while len(merges) < n_merges:
-            n = F.size(F.col("syms"))
-            pairs = vocab.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1,
-                                F.greatest(n - 1, F.lit(0))),
-                        F.slice(F.col("syms"), 2,
-                                F.greatest(n - 1, F.lit(0))),
-                        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-                    )
-                ).alias("p"),
-                "count",
-            )
-            want = min(batch_merges, n_merges - len(merges))
-            # 4x slack: disjointness filtering skips some of the head.
-            # Selecting fewer than `want` is only a round-count cost —
-            # the next round re-counts from scratch.
-            head = (
-                pairs.groupBy("p.a", "p.b")
-                .agg(F.sum("count").alias("c"))
-                .orderBy(F.col("c").desc(), "a", "b")
-                .limit(want * 4)
-                .collect()
-            )
-            batch = _select_batch(
-                [(r.a, r.b, r.c) for r in head], want, min_pair_count)
-            if not batch:
-                break
-            merges.extend(batch)
-            folded = F.col("syms")
-            for a, b in batch:
-                folded = _merge_fold(folded, a, b)
-            updated = vocab.select(folded.alias("syms"), "count")
-            since_ckpt += 1
-            if since_ckpt >= checkpoint_every:
-                updated, new_ids = checkpoint_tracked(updated)
-                release_checkpoints(spark, vocab_ids)
-                vocab_ids, since_ckpt = new_ids, 0
-            vocab = updated
-    finally:
-        release_checkpoints(spark, vocab_ids)
-    return merges
+    rows = (
+        word_vocab(df, text_col)
+        .select(_initial_symbols(F.col("word")).alias("syms"), "count")
+        .limit(MAX_VOCAB_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_VOCAB_ROWS:
+        raise ValueError(
+            f"train_bpe: the vocabulary exceeds MAX_VOCAB_ROWS "
+            f"({MAX_VOCAB_ROWS}) distinct words")
+    return _train_local(
+        [(list(r.syms), int(r["count"])) for r in rows],
+        n_merges, min_pair_count, batch_merges)
 
 
 def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

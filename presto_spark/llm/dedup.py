@@ -20,8 +20,8 @@ Four tiers, each a DataFrame transform built from JVM-side expressions:
   within shuffle capacity.
 * The survivor policy (keep min doc_id of each duplicate cluster) is a
   single groupBy on the pair list — no iterative connected components
-  needed for the common near-dup case; a full CC (graphframes-style
-  label propagation) can be layered on for chained clusters.
+  needed for the common near-dup case; chained clusters go through
+  dedup_clusters (union-find over the collected pair list).
 
 The permutation hashes use deterministic mod-arithmetic
 (h_j(x) = (a_j*x + b_j) mod p) so the DuckDB oracle can reproduce every
@@ -392,21 +392,17 @@ def near_dedup_against(
     )
 
 
-# Edge lists at or below this row count run connected components on
-# the driver (a LIMIT n+1 probe bounds the collect either way); larger
-# graphs use the distributed label-propagation loop.  Verified near-dup
-# pair lists are far smaller than the corpus, but at web scale they can
-# still be billions of rows — the distributed path stays the fallback.
-LOCAL_EDGE_ROWS = 2_000_000
+# The most (id_a, id_b) edges dedup_clusters collects to the driver.
+# Verified near-dup pair lists are far smaller than the corpus; the
+# collect is LIMIT n+1, and a larger edge list raises ValueError.
+MAX_EDGE_ROWS = 2_000_000
 
 
 def _cc_local(
     edges: list[tuple[int, int]]
 ) -> dict[int, int]:
     """Union-find connected components over an edge list →
-    {node: min reachable id}.  Same fixpoint as the distributed
-    min-label propagation (both compute min id per component), pinned
-    equal by test_dedup_clusters_local_matches_distributed."""
+    {node: min id reachable through the edges}."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -432,88 +428,27 @@ def _cc_local(
     return {n: comp_min[find(n)] for n in parent}
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-duplicate pairs → (doc_id, cluster_id).
 
-    cluster_id = min doc_id reachable through the pair graph.  Iterative
-    min-label propagation: each round joins current labels across edges
-    and keeps the smaller label, until a fixpoint (checked via count of
-    changed labels).  Near-dup graphs are shallow (duplicate groups, not
-    long chains), so rounds ≈ graph diameter ≈ 2-4; each round is one
-    shuffle on doc_id.  This is the standard Spark CC-by-label-prop —
-    GraphFrames does the same plan.
-
-    ``pairs``: (id_a, id_b) undirected edges.
-
-    Block lifecycle (VERDICT r2 "What's wrong" #2): each round's
-    localCheckpoint pins RDD blocks that DataFrame.unpersist cannot
-    release; we track the ids (operators/cte.py checkpoint_tracked) and
-    free round N's blocks as soon as round N+1 is materialized.  Only
-    the final labels checkpoint survives the call, and the ContextCleaner
-    reclaims it once the caller drops the result.
+    cluster_id = min doc_id reachable through the pair graph.
+    ``pairs``: (id_a, id_b) undirected edges.  The edge list is
+    collected to the driver (LIMIT n+1; more than MAX_EDGE_ROWS edges
+    raise ValueError), union-find labels every node, and the labels
+    return as a driver-local table.
     """
-    from presto_spark.operators.cte import checkpoint_tracked, release_checkpoints
+    from presto_spark.local_table import local_df
 
-    spark = pairs.sparkSession
-    # Adaptive local fast path (r15 optimization round, the BPE/AQE
-    # small-side pattern): a bounded LIMIT n+1 probe; if the whole
-    # edge list is driver-sized, union-find replaces 2-5 rounds of
-    # join+checkpoint+count jobs whose cost at small scale is pure
-    # scheduler overhead.  Identical output — both forms label every
-    # node with the min id reachable through the pair graph.
-    head = pairs.select("id_a", "id_b").limit(LOCAL_EDGE_ROWS + 1).collect()
-    if len(head) <= LOCAL_EDGE_ROWS:
-        labels = _cc_local([(r.id_a, r.id_b) for r in head])
-        id_type = pairs.schema["id_a"].dataType.simpleString()
-        from presto_spark.local_table import local_df
-        return local_df(
-            spark, sorted(labels.items()),
-            f"doc_id {id_type}, cluster_id {id_type}")
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    # localCheckpoint each round: truncates the lineage so round N's
-    # plan doesn't replan rounds 1..N-1 (the classic iterative-DataFrame
-    # trap); also materializes, so the changed-count scan reuses it.
-    labels, label_ids = checkpoint_tracked(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    for _ in range(max_iters):
-        # smallest neighbor label per node
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nb_min"))
-        )
-        # Fold the convergence flag into the same pass: `chg` marks rows
-        # whose label shrank, so the changed-count is a scan over the
-        # fresh checkpoint instead of an extra labels⋈updated join.
-        updated, new_ids = checkpoint_tracked(
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nb_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-                (
-                    F.coalesce(F.col("nb_min"), F.col("cluster_id"))
-                    < F.col("cluster_id")
-                ).alias("chg"),
-            )
-        )
-        changed = updated.where(F.col("chg")).count()
-        release_checkpoints(spark, label_ids)
-        labels, label_ids = updated.drop("chg"), new_ids
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
+    head = pairs.select("id_a", "id_b").limit(MAX_EDGE_ROWS + 1).collect()
+    if len(head) > MAX_EDGE_ROWS:
+        raise ValueError(
+            f"dedup_clusters: the pair graph exceeds MAX_EDGE_ROWS "
+            f"({MAX_EDGE_ROWS}) edges")
+    labels = _cc_local([(r.id_a, r.id_b) for r in head])
+    id_type = pairs.schema["id_a"].dataType.simpleString()
+    return local_df(
+        pairs.sparkSession, sorted(labels.items()),
+        f"doc_id {id_type}, cluster_id {id_type}")
 
 
 def simhash16(col: Column) -> Column:

@@ -8,8 +8,6 @@ need a shim or a policy decision, exposed as composable functions:
   histogram, ordered array_agg, reduce_agg, checksum, min/max_n)
 * relational.py — topN/grouped-topN/distinct-limit/unnest/sample/
   assign_unique_id wrappers with Presto semantics
-* cte.py — multi-reference CTE materialization policy (persist), the
-  engine's answer to Presto's LogicalCteOptimizer
 """
 
-from presto_spark.operators import aggregates, cte, relational  # noqa: F401
+from presto_spark.operators import aggregates, relational  # noqa: F401

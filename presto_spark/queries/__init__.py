@@ -93,6 +93,15 @@ from presto_spark.queries import corpus_suite  # noqa: F401,E402
 # dependency closure) and ml_learn_classify_golden were already in the
 # front.  They displace the last seven burn rows, tpcds_q90, q26, q76,
 # q91, q22, q50 and q77, which join the r17 burn queue after q8/q18.
+# One algorithm per trainer (llm/dedup.py dedup_clusters and
+# llm/bpe.py train_bpe keep only the driver-local form, bounded by
+# MAX_EDGE_ROWS / MAX_VOCAB_ROWS) and lazy recall envelopes (one plan,
+# no count() while building): EDITED => RE-FRONT brings in
+# llm_embedding_near_dup_lsh and llm_ann_lsh_recall (llm_dedup_clusters
+# and llm_bpe_train are already in group 1).  They displace the last
+# two burn rows, tpcds_q61_promo_revenue_ratio and
+# tpcds_q72_ship_delay_per_priority, which join the r17 burn queue
+# after the seven above.
 # tests/test_registry_front.py pins list(REGISTRY)[:50] == this list.
 _DRIVER_FRONT = [
     # 1. edited => re-front (bottom-k gate, clustering, lazy LSH edits)
@@ -122,12 +131,15 @@ _DRIVER_FRONT = [
     "presto_dialect_try_and_generics",
     "presto_dialect_scalar_breadth",
     "fn_color_bar_golden",
+    # 1c. edited => re-front (one trainer algorithm, lazy recall rows)
+    "llm_embedding_near_dup_lsh",
+    "llm_ann_lsh_recall",
     # 2a. the 4 deferred r8 rows
     "tpcds_q58_channel_parity_band",
     "tpcds_q59_weekday_pivot_yoy",
     "tpcds_q64_cross_year_repeat_purchases",
     "tpcds_q66_monthly_pivot_report",
-    # 2b. 21 rows of the 34-row r9 block
+    # 2b. 19 rows of the 34-row r9 block
     "tpcds_q4_triple_channel_growth",
     "tpcds_q9_bucket_case_subqueries",
     "tpcds_q10_disjunctive_exists",
@@ -147,8 +159,6 @@ _DRIVER_FRONT = [
     "tpcds_q93_sales_net_of_returns",
     "tpcds_q32_excess_discount",
     "tpcds_q37_parts_in_band_with_sales",
-    "tpcds_q61_promo_revenue_ratio",
-    "tpcds_q72_ship_delay_per_priority",
 ]
 
 

@@ -52,6 +52,12 @@ def _shingles_for(table_filter: str) -> str:
             + _shingle_src(table_filter) + " tsrc)")
 
 
+def _count(df, name: str):
+    """One-row count of ``df`` as a plan: the envelope rows crossJoin
+    several of these, so building them runs no Spark job."""
+    return df.agg(F.count(F.lit(1)).alias(name))
+
+
 # ---------------------------------------------------------------------------
 # Exact dedup (hash groupBy; duplicates synthesized by unioning a shifted
 # copy of every 10th doc — testdata has no exact dupes).
@@ -528,10 +534,11 @@ def llm_ann_lsh_recall(spark, sf_dir):
     approx = similarity.ann_topk_lsh(emb, queries, k=3).select(
         "query_id", F.col("neighbor_id").alias("nb")
     )
-    hits = exact.join(approx, ["query_id", "nb"]).count()
-    total = exact.count()
-    recall = hits / total if total else 0.0
-    return spark.createDataFrame([(recall >= 0.2,)], "recall_ok boolean")
+    counts = _count(exact, "total").crossJoin(
+        _count(exact.join(approx, ["query_id", "nb"]), "hits"))
+    recall = (F.when(F.col("total") > 0, F.col("hits") / F.col("total"))
+              .otherwise(0.0))
+    return counts.select((recall >= 0.2).alias("recall_ok"))
 
 
 # ---------------------------------------------------------------------------
@@ -748,11 +755,12 @@ def llm_multimodal_frame_sample(spark, sf_dir):
     ORDER BY doc_id
     """,
     doc="Near-duplicate cluster assignment: connected components over "
-        "LSH-verified pairs via iterative min-label propagation "
-        "(llm/dedup.py dedup_clusters — one shuffle per round, rounds = "
-        "graph diameter). The iterative-algorithm class the driver "
-        "flags as non-SQL; DuckDB's recursive CTE reachability closure "
-        "provides a full-value oracle anyway.",
+        "LSH-verified pairs (llm/dedup.py dedup_clusters — the pair "
+        "list collects to the driver, bounded by MAX_EDGE_ROWS, and "
+        "union-find labels each doc with the min id it reaches). The "
+        "iterative-algorithm class the driver flags as non-SQL; "
+        "DuckDB's recursive CTE reachability closure provides a "
+        "full-value oracle anyway.",
     tags=("llm", "dedup", "bench"),
 )
 def llm_dedup_clusters(spark, sf_dir):
@@ -861,13 +869,16 @@ def llm_embedding_near_dup_lsh(spark, sf_dir):
         emb, id_col="vec_id", vec_col="embedding", threshold=0.4,
         method="lsh",
     ).select("id_a", "id_b")
-    n_exact = exact.count()
-    n_approx = approx.count()
-    n_hit = exact.join(approx, ["id_a", "id_b"]).count()
-    recall = n_hit / n_exact if n_exact else 1.0
-    return spark.createDataFrame(
-        [(recall >= 0.35, n_hit == n_approx)],
-        "recall_ok boolean, no_false_positives boolean",
+    counts = (
+        _count(exact, "n_exact")
+        .crossJoin(_count(approx, "n_approx"))
+        .crossJoin(_count(exact.join(approx, ["id_a", "id_b"]), "n_hit"))
+    )
+    recall = (F.when(F.col("n_exact") > 0, F.col("n_hit") / F.col("n_exact"))
+              .otherwise(1.0))
+    return counts.select(
+        (recall >= 0.35).alias("recall_ok"),
+        (F.col("n_hit") == F.col("n_approx")).alias("no_false_positives"),
     )
 
 
@@ -1922,7 +1933,7 @@ def duck_bpe_replay_sql(n_merges: int, min_pair_count: int = 2) -> str:
     the ``documents`` view — per round: weighted adjacent-pair count
     over the symbol vocabulary, (count desc, a, b) argmax with the
     min_pair_count floor, and the greedy left-to-right merge fold
-    ((out, pend) state — the exact _merge_fold recurrence, with the
+    ((out, pend) state — the exact bpe._fold_local recurrence, with the
     accumulator encoded as out + [pend] in ONE list: DuckDB 1.0's
     list_reduce drops list fields nested inside a struct accumulator,
     and a plain VARCHAR[] accumulator carries correctly; '' marks an
@@ -1981,9 +1992,10 @@ def duck_bpe_replay_sql(n_merges: int, min_pair_count: int = 2) -> str:
     "llm_bpe_train",
     oracle=duck_bpe_replay_sql(12),
     doc="Sennrich BPE tokenizer training (llm/bpe.py train_bpe): the "
-        "corpus collapses once to a distributed (word, count) vocab; "
-        "each round is one weighted pair-count aggregation, a "
-        "(count desc, lex) argmax, and a JVM-side greedy merge fold. "
+        "corpus collapses once to a (word, count) vocab that collects "
+        "to the driver, bounded by MAX_VOCAB_ROWS; each round is one "
+        "weighted pair count, a (count desc, lex) argmax, and a greedy "
+        "left-to-right merge fold. "
         "The row reports the learned 12-merge table; the oracle "
         "replays the ENTIRE training loop — counts, argmax, fold, "
         "min-count early stop — as 12 unrolled materialized SQL "

@@ -3,10 +3,11 @@ plans it, and only ``collect()`` executes it (Presto plans first and
 executes when asked).
 
 Each row is built under its own job group and the jobs the status
-store records for that group are counted.  The LSH near-dedup rows
-build with 0 jobs.  llm_dedup_clusters keeps the jobs of
-``dedup_clusters``' LIMIT n+1 gate probe, which executes the lazy pair
-plan to choose the driver-local union-find.
+store records for that group are counted.  The LSH near-dedup rows and
+the two recall-envelope rows build with 0 jobs.  The two trainers keep
+the jobs of their bounded LIMIT n+1 collect: llm_dedup_clusters
+collects the edge list (executing the lazy pair plan) for union-find,
+llm_bpe_train collects the (word, count) vocabulary for the merge loop.
 """
 
 from __future__ import annotations
@@ -22,7 +23,10 @@ from tests.conftest import SF_DIR
 BUILD_JOBS = {
     "llm_lsh_near_dedup": 0,
     "llm_cross_near_dedup": 0,
+    "llm_embedding_near_dup_lsh": 0,
+    "llm_ann_lsh_recall": 0,
     "llm_dedup_clusters": 4,
+    "llm_bpe_train": 2,
 }
 
 

@@ -99,8 +99,16 @@ def test_dedup_clusters_transitive(spark):
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
     out = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
-    assert out[1] == out[2] == out[3] == 1
-    assert out[10] == out[11] == 10
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+    # a long chain, a star with mixed edge directions, an isolated pair
+    edges = ([(i, i + 1) for i in range(1, 9)]
+             + [(20, 21), (22, 21), (23, 20)]
+             + [(30, 31)])
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    out = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
+    assert out == {**{i: 1 for i in range(1, 10)},
+                   20: 20, 21: 20, 22: 20, 23: 20, 30: 30, 31: 30}
 
 
 def test_with_shingles_python_matches_column_path(spark):
@@ -145,34 +153,16 @@ def test_with_shingles_python_matches_column_path(spark):
     }
 
 
-def test_dedup_clusters_local_matches_distributed(spark, monkeypatch):
-    """r15 optimization round: the size-gated driver-local union-find
-    fast path must produce the IDENTICAL (doc_id, cluster_id) labeling
-    as the distributed min-label propagation — including long chains
-    (multiple propagation rounds) and the probe-overflow boundary
-    (LOCAL_EDGE_ROWS smaller than the edge count forces the
-    distributed path)."""
-    edges = ([(i, i + 1) for i in range(1, 9)]         # 8-node chain
-             + [(20, 21), (22, 21), (23, 20)]          # star, mixed dirs
-             + [(30, 31)])
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    default_limit = dedup.LOCAL_EDGE_ROWS
-    local_runs = []
-    cc_local = dedup._cc_local
-    monkeypatch.setattr(dedup, "_cc_local",
-                        lambda e: local_runs.append(1) or cc_local(e))
-
-    def clusters(limit, local):
-        monkeypatch.setattr(dedup, "LOCAL_EDGE_ROWS", limit)
-        local_runs.clear()
-        out = {(r.doc_id, r.cluster_id)
-               for r in dedup.dedup_clusters(pairs).collect()}
-        assert bool(local_runs) == local, limit
-        return out
-
-    dist = clusters(0, False)
-    assert clusters(default_limit, True) == dist
-    assert clusters(3, False) == dist
+def test_dedup_clusters_rejects_edges_over_bound(spark, monkeypatch):
+    """More than MAX_EDGE_ROWS pairs raise instead of collecting an
+    unbounded edge list; exactly MAX_EDGE_ROWS still clusters."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    monkeypatch.setattr(dedup, "MAX_EDGE_ROWS", 2)
+    with pytest.raises(ValueError, match="MAX_EDGE_ROWS"):
+        dedup.dedup_clusters(pairs)
+    monkeypatch.setattr(dedup, "MAX_EDGE_ROWS", 3)
+    assert dedup.dedup_clusters(pairs).count() == 5
 
 
 # ---- repetition filters + PII redaction (llm/text.py round-6) ----
@@ -708,6 +698,15 @@ def test_train_bpe_matches_reference_algorithm(spark):
     assert got == expected
     assert len(got) == 8
 
+    # a min_pair_count floor that stops training early
+    texts.append("a bb a bb ccc ccc d")
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+    words = Counter(w for t in texts for w in t.split())
+    got = bpe.train_bpe(df, n_merges=12, min_pair_count=3)
+    assert got == _ref_bpe(words, 12, min_count=3)
+    assert len(got) == 10
+
 
 def test_apply_bpe_roundtrip_and_compression(spark):
     """Encoding with learned merges: concatenating a word's BPE tokens
@@ -766,42 +765,30 @@ def test_train_bpe_batched_mode_guarantees(spark):
     with pytest.raises(ValueError, match="batch_merges"):
         bpe.train_bpe(df, n_merges=2, batch_merges=0)
 
-
-def test_train_bpe_local_matches_distributed(spark, monkeypatch):
-    """r15 optimization round: the size-gated driver-local merge loop
-    (train_bpe's small-vocab fast path) must produce the IDENTICAL
-    merge list as the distributed loop — in exact mode and in batched
-    mode — since the registry oracle replays the exact sequential
-    algorithm.  LOCAL_VOCAB_ROWS=0 forces the distributed path."""
-    from presto_spark.llm import bpe
-
-    texts = ["low low low low low",
-             "lower lower newest newest newest",
-             "newest newest newest widest widest",
-             "a bb a bb ccc ccc d"]
+    # a second corpus: single-letter and repeated-letter words
+    texts = texts + ["a bb a bb ccc ccc d"]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+    seq = bpe.train_bpe(df, n_merges=8)
+    batched = bpe.train_bpe(df, n_merges=8, batch_merges=4)
+    assert batched[0] == seq[0]
+    assert len(set(batched)) == len(batched) == 8
+    assert batched == bpe.train_bpe(
+        df.repartition(3), n_merges=8, batch_merges=4)
 
-    default_limit = bpe.LOCAL_VOCAB_ROWS
-    local_runs = []
-    train_local = bpe._train_local
-    monkeypatch.setattr(bpe, "_train_local",
-                        lambda *a: local_runs.append(1) or train_local(*a))
 
-    def train(limit, local, **kw):
-        monkeypatch.setattr(bpe, "LOCAL_VOCAB_ROWS", limit)
-        local_runs.clear()
-        merges = bpe.train_bpe(df, **kw)
-        assert bool(local_runs) == local, (limit, kw)
-        return merges
+def test_train_bpe_rejects_vocab_over_bound(spark, monkeypatch):
+    """A vocabulary of more than MAX_VOCAB_ROWS distinct words raises
+    instead of collecting an unbounded vocabulary."""
+    from presto_spark.llm import bpe
 
-    for kw in ({}, {"batch_merges": 4}, {"min_pair_count": 3}):
-        local = train(default_limit, True, n_merges=8, **kw)
-        dist = train(0, False, n_merges=8, **kw)
-        assert local == dist, kw
-    # The probe boundary: a vocab LARGER than the limit must also take
-    # the distributed path (limit n+1 sees n+1 rows) and still agree.
-    assert train(2, False, n_merges=4) == train(0, False, n_merges=4)
+    df = spark.createDataFrame(
+        [(0, "low lower newest widest")], "doc_id int, text string")
+    monkeypatch.setattr(bpe, "MAX_VOCAB_ROWS", 3)
+    with pytest.raises(ValueError, match="MAX_VOCAB_ROWS"):
+        bpe.train_bpe(df, n_merges=2)
+    monkeypatch.setattr(bpe, "MAX_VOCAB_ROWS", 4)
+    assert len(bpe.train_bpe(df, n_merges=2, min_pair_count=1)) == 2
 
 
 def test_bigram_lm_lazy_vocab_matches_eager(spark):

@@ -2,16 +2,16 @@
 session and must leave no persisted/checkpointed state behind, and must
 not get slower on the second pass.
 
-Locks in the lifecycle of the iterative operators (dedup_clusters and
-train_bpe releasing their per-round localCheckpoint blocks —
-operators/cte.py checkpoint_tracked/release_checkpoints) and of the
-lazy LSH near-dedup plans, which pin nothing at all: a regression that
-leaks strongly-pinned blocks would show up here as RDDs that survive
+Locks in the lifecycle of the iterative operators (the k-means
+trainer; dedup_clusters and train_bpe, which collect a bounded input
+to the driver and loop there) and of the lazy LSH near-dedup plans,
+none of which should pin anything: a regression that leaks
+strongly-pinned blocks would show up here as RDDs that survive
 explicit release, the exact failure mode that poisoned the r2 bench
 session (DataFrame.unpersist cannot drop local-checkpoint blocks).
 
-Protocol: after each query, any NEW persistent blocks (the
-caller-owned result checkpoints of the iterative operators) are released
+Protocol: after each query, any NEW persistent blocks (caller-owned
+checkpoints such as operators/geo_agg.py's keyed frame) are released
 explicitly via the SparkContext registry — the same cleanup bench.py's
 _isolate performs, and what a long-lived production session does when
 it drops a result.  This keeps the assertion deterministic: GC-based
@@ -69,8 +69,8 @@ _HEAVY = [
     "geo_simplify_flatten_golden",
     # round-15 heavy tiers: the iterative k-means trainer + SemDeDup
     # pair join (now the suite's heaviest row), and BPE training,
-    # whose per-8-round checkpoint_tracked/release cadence is exactly
-    # the lifecycle contract this suite exists to lock.
+    # whose vocabulary collect and driver-side merge loop must leave
+    # no blocks behind across reruns.
     "llm_kmeans_semdedup",
     "llm_bpe_train",
 ]
