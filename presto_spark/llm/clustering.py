@@ -1,32 +1,31 @@
 """Embedding k-means for corpus curation (round 14, built ahead for
 the r15 driver window).
 
-Why a relational Lloyd's algorithm: semantic bucketing of a corpus —
-domain balancing, semantic dedup beyond sign-LSH, IVF coarse-quantizer
+Why Lloyd's algorithm here: semantic bucketing of a corpus — domain
+balancing, semantic dedup beyond sign-LSH, IVF coarse-quantizer
 TRAINING (llm/similarity.py ann_topk_ivf currently uses the first-k
 deterministic bank; these trained centroids drop straight into its
 ``cents`` contract) — all want k centers learned from the data at
 corpus scale.
 
-Distributed design:
-* Assignment is a broadcast of the tiny centroid bank (k × dim
-  doubles) against every vector — argmin squared-L2 computed as one
-  fold over the bank per row, map-side, no shuffle, no UDF.
-* The update step is the posexplode shape: (cluster, pos, component)
-  rows feed a partial-aggregatable sum/count per (cluster, pos) —
-  the only shuffle per round, carrying n·dim scalars with map-side
-  combine.  The k × dim result is the ONLY thing that reaches the
-  driver each round.
+One driver loop at every size: kmeans_train makes one bounded collect
+of (id, vector, md5 init key) — LIMIT MAX_TRAIN_ROWS + 1; more rows
+raise ValueError — and runs Lloyd's rounds in numpy on the driver.
+Only the k × dim centroid bank leaves the trainer; assignment over the
+full corpus (kmeans_fit_assign, semantic_dedup_pairs) stays a map-side
+Arrow pass against the broadcast bank.
 
 Determinism (the engine's cross-engine discipline, queries/base.py):
-double summation is order-dependent, so a plain avg() would make
-centroids — and downstream assignments near ties — vary with
-partitioning.  Component sums therefore run in DECIMAL(30,10)
-(exact, order-free; embeddings are float32 ≪ 10 fractional digits),
-and each new centroid component rounds at 9 decimals before going
-back to DOUBLE.  Same input ⇒ bit-identical centroids on any
-partition layout and any engine, which is what lets a SQL oracle
-replay whole training runs.
+double summation is order-dependent, so a plain mean would make
+centroids — and downstream assignments near ties — vary with input
+order.  Component sums therefore run over the units of the engine's
+``CAST(x AS DECIMAL(30,10))`` as exact integers (order-free;
+embeddings are float32 ≪ 10 fractional digits), and each new centroid
+component rounds at 9 decimals before going back to DOUBLE.  The
+engine's cast defines the units (_quantized_units reproduces it and
+asks the engine for the values it cannot prove), so the same input
+gives bit-identical centroids on any partition layout, which is what
+lets a SQL oracle replay whole training runs.
 
 Empty clusters keep their previous centroid (the standard Lloyd
 fallback; deterministic).
@@ -36,10 +35,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_SUM_DEC = "decimal(30,10)"
 _ROUND = 9
 
 
@@ -48,8 +46,8 @@ def _np_dists(X, C):
     order: per (row, centroid) the fold is acc + (x_j - c_j)^2 in dim
     order, left to right — a dim loop of vectorized float64 ops issues
     the identical IEEE add sequence per cell, so every distance is
-    bit-equal to the Column-fold form (_sq_dist/_best_struct) and to
-    the DuckDB list_reduce replay.  The r15 optimization-round change
+    bit-equal to a SQL ``aggregate(zip_with(...))`` fold and to the
+    DuckDB list_reduce replay.  The r15 optimization-round change
     (guide §4.2): the interpreted-HOF fold cost ~µs per (row,
     centroid, dim) element; this runs the same arithmetic through
     numpy at C speed."""
@@ -86,107 +84,13 @@ def _np_mat(col) -> "object":
     return np.array([np.asarray(v, dtype=np.float64) for v in col])
 
 
-def _sq_dist(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance to a constant centroid — zip with the
-    literal bank + one left-to-right fold.  The lambda form keeps the
-    expression tree shallow (dim literal leaves, O(1) operator nodes),
-    where an unrolled (v[j]-c_j)^2 chain cost seconds of Catalyst
-    analysis per training round at k x dim terms."""
-    bank = F.array(*[F.lit(float(c)) for c in centroid])
-    return F.aggregate(
-        F.zip_with(vec, bank, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
-def _best_struct(vec: Column, centroids: list[list[float]]) -> Column:
-    """STRUCT(dist, cid) of the nearest centroid: array_min over
-    (dist, cid) structs — lowest cid wins exact ties.
-
-    Shape: ONE indexed transform over a nested bank literal, so the
-    expression holds a single copy of the distance fold (O(1)
-    operator nodes + k·dim literal leaves) instead of k unrolled
-    copies — the same node-count discipline as _sq_dist's lambda
-    form, applied across the bank dimension.  Every Lloyd round
-    analyzes and codegens a fresh plan with new centroid literals, so
-    expression size is pure per-round overhead.  Arithmetic and
-    tie-break are bit-identical to the unrolled form."""
-    bank = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in centroids
-    ])
-    return F.array_min(
-        F.transform(
-            bank,
-            lambda c, i: F.struct(
-                F.aggregate(
-                    F.zip_with(vec, c, lambda x, cc: (x - cc) * (x - cc)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("dist"),
-                i.alias("cid"),
-            ),
-        )
-    )
-
-
-def assign_clusters(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Attach ``cluster_id`` = argmin squared-L2 over the centroid
-    bank (lowest id wins ties — deterministic).  Map-side only."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.withColumn(
-        "cluster_id", _best_struct(v, centroids)["cid"].cast("int"))
-
-
-def _assign_components(
-    df: DataFrame, centroids: list[list[float]], vec_col: str
-) -> DataFrame:
-    """(cluster_id, embedding ARRAY<DOUBLE>) rows for one Lloyd update:
-    argmin assignment in an Arrow-batched numpy pass (bit-equal to the
-    Column-fold form, see _np_dists; np.argmin's first-min matches the
-    array_min struct tie-break of lowest cid).  Map-side, one Python
-    crossing; only the vector column ships (guide §4.1)."""
-    import numpy as np
-
-    bank = [list(map(float, c)) for c in centroids]
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        C = np.asarray(bank, dtype=np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = _np_mat(pdf[vec_col])
-            cid = np.argmin(_np_dists(X, C), axis=1).astype("int32")
-            yield pd.DataFrame({
-                "cluster_id": cid,
-                "embedding": list(X),
-            })
-
-    return df.select(vec_col).mapInPandas(
-        run, schema="cluster_id int, embedding array<double>")
-
-
-# Corpora at or below this row count train on the driver (one bounded
-# LIMIT n+1 collect — the BPE/CC size-gate pattern); larger corpora
-# keep the unchanged distributed Lloyd loop.  100k rows x 64 dims x
-# 8 B = ~50 MB collected, far under the driver's practical bound; the
-# exact-integer component sums below stay inside int64 for
-# n x max|unit| <= 2^62 (guarded at runtime).
-LOCAL_TRAIN_ROWS = 100_000
-# |component| bound for the local path: keeps the scaled-integer units
-# (|x| * 1e10) small enough that 100k of them sum inside int64, and
-# keeps the fast-tier boundary error analysis valid (ulp(8e10) and the
-# string-parse slack are both ~2e-5 units, 5x inside _HALF_GUARD).
-_LOCAL_MAX_ABS = 8.0
+# The training collect is LIMIT n+1; a larger corpus raises ValueError.
+# 100k rows x 64 dims x 8 B = ~50 MB on the driver.
+MAX_TRAIN_ROWS = 100_000
 # Fast-tier band (in fractional units of 1e-10) around a .5 rounding
-# boundary: values outside it quantize vectorized; values inside go
-# through the exact per-value tier below.
+# boundary, for |x| <= 8; it widens in proportion to |x| above that.
+# Values outside it quantize vectorized; values inside go through the
+# exact per-value tier below.
 _HALF_GUARD = 1e-4
 
 
@@ -208,12 +112,14 @@ def _quantize_one_exact(x: float):
     * the exact fraction is farther from .5 than half an ulp — no
       valid string can flip the rounding.
 
-    Anything else returns None and the caller falls back to the
-    distributed loop."""
+    Anything else, NaN and infinities included, returns None and the
+    caller asks the engine."""
     import math
     from decimal import Decimal
     from fractions import Fraction
 
+    if not math.isfinite(x):
+        return None
     p, q = abs(x).as_integer_ratio()
     n_, r = divmod(p * 10 ** 10, q)
     if 2 * r == q:
@@ -228,87 +134,114 @@ def _quantize_one_exact(x: float):
     return n_ + (1 if 2 * r > q else 0)
 
 
-def _local_quantized_units(X):
-    """Per-value DECIMAL(30,10) HALF_UP quantization as exact integer
-    units of 1e-10 — the replica of Spark's
-    ``cast(val AS DECIMAL(30,10))``.
+def _quantized_units(spark, X):
+    """Signed int64 units of 1e-10 for every value of X, equal to the
+    engine's ``CAST(x AS DECIMAL(30,10))`` (HALF_UP; NULL, for NaN and
+    infinities, counts as 0 — SQL sum skips it).
 
     Fast tier: for values whose fractional part at the 10th digit is
-    at least _HALF_GUARD away from .5, ``floor(|x|*1e10 + 0.5)`` in
-    float64 is exact for any round-trip string (both the float error,
-    ulp(|x|*1e10) <= 1.6e-5 units at |x| < 8, and the string-parse
-    slack, ulp(x)/2 * 1e10 <= 0.9e-5 units, sit 5x inside the band).
-    Values inside the band take the exact integer tier
-    (_quantize_one_exact); an unresolvable value returns ok=False and
-    the caller uses the distributed loop."""
+    at least ``_HALF_GUARD * max(1, |x|/8)`` away from .5,
+    ``floor(|x|*1e10 + 0.5)`` in float64 is exact for any round-trip
+    string: the float error, ulp(|x|*1e10)/2, and the string-parse
+    slack, ulp(x)/2 * 1e10, both grow in proportion to |x| and stay
+    5x inside the band.  Values inside the band take the exact
+    integer tier (_quantize_one_exact); the few it cannot prove get
+    their units from the engine's own cast, in one query over only
+    those values.
+
+    Raises ValueError when ``len(X) * max|unit| >= 2**62``: the
+    component sums would leave int64 headroom."""
     import numpy as np
 
     ax = np.abs(X)
-    if np.any(~np.isfinite(X)) or np.any(ax >= _LOCAL_MAX_ABS):
-        return None, False
     u = ax * 1e10
-    f = u - np.floor(u)
-    units = np.floor(u + 0.5)
-    near = np.abs(f - 0.5) < _HALF_GUARD
-    if np.any(near):
-        flat = X.ravel()
-        uf = units.ravel()
-        for i in np.flatnonzero(near.ravel()):
-            exact = _quantize_one_exact(float(flat[i]))
-            if exact is None:
-                return None, False
-            uf[i] = exact
-    return (np.sign(X) * units).astype(np.int64), True
+    top = np.floor(np.where(np.isfinite(u), u, 0.0).max(initial=0.0) + 0.5)
+    if len(X) * top >= 2 ** 62:
+        raise ValueError(
+            "kmeans_train: component sums exceed int64 headroom "
+            f"(rows x max|unit| >= 2**62; max |x| = {float(ax.max())})")
+    band = _HALF_GUARD * np.maximum(1.0, ax / 8)
+    fast = np.abs(u - np.floor(u) - 0.5) >= band
+    units = np.copysign(np.where(fast, np.floor(u + 0.5), 0.0), X)
+    units = units.astype(np.int64)
+    flat, xs = units.reshape(-1), X.reshape(-1)
+    ask = []
+    for i in np.flatnonzero(~fast):
+        x = float(xs[i])
+        exact = _quantize_one_exact(x)
+        if exact is None:
+            ask.append(i)
+        else:
+            flat[i] = exact if x > 0 else -exact
+    if ask:
+        cast = spark.createDataFrame(
+            [(float(xs[i]),) for i in ask], "x double"
+        ).select(F.col("x").cast("decimal(30,10)").alias("d")).collect()
+        for i, r in zip(ask, cast):
+            flat[i] = 0 if r.d is None else int(r.d.scaleb(10))
+    return units
 
 
-def _kmeans_train_local(
-    rows, k: int, n_iters: int
-) -> list[list[float]] | None:
-    """Driver-local Lloyd loop, bit-identical to the distributed one
-    (pinned by test_kmeans_train_local_matches_distributed):
+def kmeans_train(
+    df: DataFrame,
+    k: int,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    n_iters: int = 5,
+) -> list[list[float]]:
+    """Lloyd's k-means with deterministic hash-spread init and a
+    FIXED iteration count (engine-replayable: a convergence test on
+    doubles would couple the round count to float noise).  Returns the
+    k × dim centroid bank (driver-side — small by construction).
 
-    * init: sort by (md5(str(id)), id) — hashlib.md5 of the decimal
-      string is the same bytes the engine hashes;
-    * assignment: the shared _np_dists / argmin kernel (already
-      bit-equal to the Column fold);
-    * update: exact integer-unit DECIMAL sums (see
-      _local_quantized_units), float(Decimal(S) / 1e10) per component
-      — the same nearest-double the engine's collect returns — then
-      the identical ``round(float(s) / n, 9)`` line.
+    Init picks the k vectors that sort first by (md5(CAST(id AS
+    STRING)), id, vector) — the deterministic_split trick.  Replayable
+    like first-k-by-id (the engine computes the key, and the DuckDB
+    replay hashes the same decimal string) but without its degeneracy:
+    the first k rows of a corpus are often CLUSTERED (one crawl batch,
+    one domain), while an md5 order is a uniform sample of the id
+    space (VERDICT r14 What's-wrong #4).  The vector only breaks ties
+    between duplicate ids.
 
-    Returns None when any guard trips (non-int/str ids, NULL/ragged
-    vectors, duplicate ids, magnitude or rounding-boundary band,
-    int64 headroom) — the caller falls back to the distributed loop.
-    """
-    import hashlib
+    Each round: argmin assignment through _np_dists (first minimum,
+    so the lowest cluster id wins ties), exact integer sums of the
+    DECIMAL(30,10) units per (cluster, component), then
+    ``round(float(S / 1e10) / n, 9)`` — float(S / 1e10) is the double
+    the engine's collect of the DECIMAL sum returns.
+
+    Raises ValueError for a NULL id; a NULL, empty or ragged vector;
+    more than MAX_TRAIN_ROWS rows; fewer than k rows; and component
+    sums past int64 headroom (see _quantized_units)."""
     from decimal import Decimal, localcontext
 
     import numpy as np
 
-    ids = [r[0] for r in rows]
-    if any(i is None for i in ids) or len(set(ids)) != len(ids):
-        return None
-    if not all(isinstance(i, (int, str)) for i in ids):
-        return None
-    vecs = [r[1] for r in rows]
-    if any(v is None for v in vecs):
-        return None
-    dim = len(vecs[0]) if vecs else 0
-    if dim == 0 or any(len(v) != dim for v in vecs):
-        return None
-    order = sorted(
-        range(len(ids)),
-        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(),
-                       ids[i]))
-    centroids = [list(map(float, vecs[i])) for i in order[:k]]
-    if len(centroids) < k:
+    if k <= 0 or n_iters <= 0:
+        raise ValueError(f"k and n_iters must be positive: {k}, {n_iters}")
+    rows = (
+        df.select(id_col, vec_col, F.md5(F.col(id_col).cast("string")))
+        .limit(MAX_TRAIN_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_TRAIN_ROWS:
         raise ValueError(
-            f"need at least k={k} vectors, got {len(centroids)}")
-    X = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-    units, ok = _local_quantized_units(X)
-    if not ok or len(X) * float(np.abs(units).max(initial=0)) >= 2 ** 62:
-        return None
-    C = np.asarray(centroids, dtype=np.float64)
+            f"kmeans_train: the corpus exceeds MAX_TRAIN_ROWS "
+            f"({MAX_TRAIN_ROWS}) rows")
+    if len(rows) < k:
+        raise ValueError(f"need at least k={k} vectors, got {len(rows)}")
+    if any(r[0] is None for r in rows):
+        raise ValueError(f"kmeans_train: NULL {id_col}")
+    dim = len(rows[0][1] or ())
+    if dim == 0 or any(r[1] is None or len(r[1]) != dim for r in rows):
+        raise ValueError(
+            f"kmeans_train: every {vec_col} must be a non-NULL vector "
+            f"of one non-zero length (NULL, empty or ragged vector)")
+    X = np.array([r[1] for r in rows], dtype=np.float64)
+    units = _quantized_units(df.sparkSession, X)
+    vecs = X.tolist()
+    order = sorted(
+        range(len(rows)), key=lambda i: (rows[i][2], rows[i][0], vecs[i]))
+    C = X[order[:k]]
     with localcontext() as ctx:
         ctx.prec = 50
         ten10 = Decimal(10) ** 10
@@ -327,77 +260,7 @@ def _kmeans_train_local(
                     for j in range(dim)
                 ]
             C = new
-    return [list(map(float, c)) for c in C]
-
-
-def kmeans_train(
-    df: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_iters: int = 5,
-) -> list[list[float]]:
-    """Lloyd's k-means with deterministic hash-spread init and a
-    FIXED iteration count (engine-replayable: a convergence test on
-    doubles would couple the round count to float noise).  Returns the
-    k × dim centroid bank (driver-side — small by construction).
-
-    Init picks the k vectors whose ids sort first by
-    (md5(id-as-string), id) — the deterministic_split trick.  Replayable
-    like first-k-by-id (both engines hash the same decimal string) but
-    without its degeneracy: the first k rows of a corpus are often
-    CLUSTERED (one crawl batch, one domain), while an md5 order is a
-    uniform sample of the id space (VERDICT r14 What's-wrong #4)."""
-    if k <= 0 or n_iters <= 0:
-        raise ValueError(f"k and n_iters must be positive: {k}, {n_iters}")
-    # Size gate (r16, VERDICT r15 next-round #6 — the BPE/CC pattern):
-    # at bench scale the init job + n_iters round jobs are ~0.35 s of
-    # fixed overhead EACH on a ~1 MB corpus.  Probe with LIMIT n+1
-    # (bounded collect either way); if the corpus fits, train on the
-    # driver with the bit-identical local loop.  Web-scale corpora
-    # overflow the probe and take the unchanged distributed loop, and
-    # any local guard (id types, NULL/ragged vectors, rounding-boundary
-    # band) falls back too.
-    probe = (
-        df.select(id_col, vec_col).limit(LOCAL_TRAIN_ROWS + 1).collect())
-    if len(probe) <= LOCAL_TRAIN_ROWS:
-        local = _kmeans_train_local(probe, k, n_iters)
-        if local is not None:
-            return local
-    del probe
-    init_rows = (
-        df.orderBy(F.md5(F.col(id_col).cast("string")), id_col).limit(k)
-        .select(F.transform(F.col(vec_col),
-                            lambda x: x.cast("double")).alias("v"))
-        .collect()
-    )
-    centroids = [list(r.v) for r in init_rows]
-    if len(centroids) < k:
-        raise ValueError(f"need at least k={k} vectors, got {len(centroids)}")
-    dim = len(centroids[0])
-    for _ in range(n_iters):
-        comp = _assign_components(df, centroids, vec_col).select(
-            "cluster_id",
-            F.posexplode(F.col("embedding")).alias("pos", "val"),
-        )
-        sums = (
-            comp.groupBy("cluster_id", "pos")
-            .agg(
-                F.sum(F.col("val").cast(_SUM_DEC)).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        new = [list(c) for c in centroids]  # empty clusters keep old
-        acc: dict[int, list] = {}
-        for r in sums:
-            acc.setdefault(r.cluster_id, [None] * dim)[r.pos] = (r.s, r.n)
-        for cid, cells in acc.items():
-            new[cid] = [
-                round(float(s) / int(n), _ROUND) for (s, n) in cells
-            ]
-        centroids = new
-    return centroids
+    return C.tolist()
 
 
 def kmeans_fit_assign(

@@ -102,6 +102,12 @@ from presto_spark.queries import corpus_suite  # noqa: F401,E402
 # two burn rows, tpcds_q61_promo_revenue_ratio and
 # tpcds_q72_ship_delay_per_priority, which join the r17 burn queue
 # after the seven above.
+# One k-means trainer (llm/clustering.py kmeans_train keeps only the
+# driver loop, bounded by MAX_TRAIN_ROWS), the one-pass exact tier of
+# llm_embedding_near_dup_lsh and corpus_product_golden's view restore:
+# every edited row (llm_kmeans_semdedup, llm_ann_ivf_topk,
+# llm_embedding_near_dup_lsh, corpus_product_golden) is already in the
+# front, so nothing is displaced.
 # tests/test_registry_front.py pins list(REGISTRY)[:50] == this list.
 _DRIVER_FRONT = [
     # 1. edited => re-front (bottom-k gate, clustering, lazy LSH edits)

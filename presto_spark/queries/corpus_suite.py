@@ -187,6 +187,10 @@ _ORACLE = "SELECT * FROM (VALUES\n" + ",\n".join(
 )
 def corpus_product_golden(spark, sf_dir):
     prepare(spark, sf_dir)
+    # the fixture views shadow the sf-dir nation/region; keep the
+    # parquet views to restore them (other registry queries share this
+    # session)
+    shadowed = {t: spark.table(t) for t in ("nation", "region")}
     register_fixtures(spark)
     # one spark.sql() per case, DataFrame-unioned: a single textual
     # UNION ALL of SQL-UDF-laden arms makes Catalyst's SQL-function
@@ -198,11 +202,7 @@ def corpus_product_golden(spark, sf_dir):
         run_sql(spark, f"SELECT '{name}' AS tc, ok FROM ({translate(sql)})")
         for name, sql in _CASES
     ]
-    # the fixture views shadow the sf-dir nation/region; every part's
-    # PLAN is captured above (spark.sql analyzes eagerly), so restore
-    # the parquet catalog before returning — other registry queries
-    # share this session
-    from presto_spark.sources.catalog import register_tables
-
-    register_tables(spark, sf_dir)
+    # every part's PLAN is captured above (spark.sql analyzes eagerly)
+    for t, df in shadowed.items():
+        df.createOrReplaceTempView(t)
     return reduce(lambda a, b: a.unionAll(b), parts).orderBy("tc")

@@ -869,11 +869,15 @@ def llm_embedding_near_dup_lsh(spark, sf_dir):
         emb, id_col="vec_id", vec_col="embedding", threshold=0.4,
         method="lsh",
     ).select("id_a", "id_b")
-    counts = (
-        _count(exact, "n_exact")
-        .crossJoin(_count(approx, "n_approx"))
-        .crossJoin(_count(exact.join(approx, ["id_a", "id_b"]), "n_hit"))
-    )
+    # the all-pairs exact tier is evaluated once: both sides are
+    # distinct pair sets (id_a < id_b; LSH pairs are deduplicated), so
+    # the left join keeps one row per exact pair
+    hits = exact.join(approx.withColumn("_hit", F.lit(1)),
+                      ["id_a", "id_b"], "left")
+    counts = hits.agg(
+        F.count(F.lit(1)).alias("n_exact"),
+        F.count("_hit").alias("n_hit"),
+    ).crossJoin(_count(approx, "n_approx"))
     recall = (F.when(F.col("n_exact") > 0, F.col("n_hit") / F.col("n_exact"))
               .otherwise(1.0))
     return counts.select(

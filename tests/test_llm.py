@@ -930,43 +930,214 @@ def test_kmeans_matches_duckdb_unrolled_replay(spark, duck):
     assert_same(got, duck, duck_kmeans_replay_sql(4, 3, dim))
 
 
-def test_kmeans_train_local_matches_distributed(spark, monkeypatch):
-    """r16 size gate (VERDICT r15 next-round #6): the driver-local
-    Lloyd loop must be bit-identical to the distributed one on the
-    real embeddings table — same seeding order, same DECIMAL(30,10)
-    HALF_UP component sums, same rounding."""
+_SUM_DEC = "decimal(30,10)"
+
+
+def _assign_components(df, centroids, vec_col):
+    """(cluster_id, embedding ARRAY<DOUBLE>) rows for one Lloyd update:
+    argmin assignment in an Arrow-batched numpy pass (bit-equal to the
+    Column-fold form, see _np_dists; np.argmin's first-min matches the
+    array_min struct tie-break of lowest cid).  Map-side, one Python
+    crossing; only the vector column ships (guide §4.1)."""
+    import numpy as np
+
+    from presto_spark.llm.clustering import _np_dists, _np_mat
+
+    bank = [list(map(float, c)) for c in centroids]
+
+    def run(batches):
+        import pandas as pd
+
+        C = np.asarray(bank, dtype=np.float64)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = _np_mat(pdf[vec_col])
+            cid = np.argmin(_np_dists(X, C), axis=1).astype("int32")
+            yield pd.DataFrame({
+                "cluster_id": cid,
+                "embedding": list(X),
+            })
+
+    return df.select(vec_col).mapInPandas(
+        run, schema="cluster_id int, embedding array<double>")
+
+
+def _kmeans_reference(df, k, vec_col="embedding", id_col="vec_id",
+                      n_iters=5):
+    """Reference Lloyd loop for kmeans_train: every round is Spark jobs
+    — the init orders by (md5(id-as-string), id) in the engine, the
+    update sums the engine's CAST(val AS DECIMAL(30,10)) per (cluster,
+    pos) in a groupBy.  The engine's own cast and DECIMAL sums are what
+    kmeans_train's exact integer units must reproduce."""
+    init_rows = (
+        df.orderBy(F.md5(F.col(id_col).cast("string")), id_col).limit(k)
+        .select(F.transform(F.col(vec_col),
+                            lambda x: x.cast("double")).alias("v"))
+        .collect()
+    )
+    centroids = [list(r.v) for r in init_rows]
+    if len(centroids) < k:
+        raise ValueError(f"need at least k={k} vectors, got {len(centroids)}")
+    dim = len(centroids[0])
+    for _ in range(n_iters):
+        comp = _assign_components(df, centroids, vec_col).select(
+            "cluster_id",
+            F.posexplode(F.col("embedding")).alias("pos", "val"),
+        )
+        sums = (
+            comp.groupBy("cluster_id", "pos")
+            .agg(
+                F.sum(F.col("val").cast(_SUM_DEC)).alias("s"),
+                F.count("*").alias("n"),
+            )
+            .collect()
+        )
+        new = [list(c) for c in centroids]  # empty clusters keep old
+        acc: dict[int, list] = {}
+        for r in sums:
+            acc.setdefault(r.cluster_id, [None] * dim)[r.pos] = (r.s, r.n)
+        for cid, cells in acc.items():
+            new[cid] = [
+                round(float(s) / int(n), 9) for (s, n) in cells
+            ]
+        centroids = new
+    return centroids
+
+
+# Values whose HALF_UP rounding at the 10th decimal the exact Python
+# tier cannot prove: their units come from the engine's cast.
+_STRADDLE = [1.00000000005, 3.00000000005, 1234.00000000005, 5e-11]
+
+_KMEANS_CASES = {
+    # |x| >= 8: the inputs of the two-cluster and empty-cluster tests
+    "two_clusters": (
+        [(i, [0.0 + i * 0.01, 0.0]) for i in range(4)]
+        + [(10 + i, [10.0 + i * 0.01, 5.0]) for i in range(4)],
+        "int", 2, 4),
+    "empty_cluster": (
+        [(0, [0.0, 0.0]), (1, [0.2, 0.0]),
+         (2, [50.0, 0.0]), (3, [50.2, 0.0])],
+        "int", 3, 3),
+    "half_band": (
+        [(0, [5e-11, 0.0]), (1, [1.0, 0.0]),
+         (2, [2.0, 3.0]), (3, [2.2, 3.0])],
+        "int", 2, 2),
+    "straddle": (
+        [(0, [1.00000000005, 0.0]), (1, [3.00000000005, 1.0]),
+         (2, [1234.00000000005, 2.0]), (3, [1.0, 0.00000000015]),
+         (4, [3.0, 1.00000000025]), (5, [1234.0, 2.0])],
+        "int", 3, 3),
+    # ids 6, 7, 4 sort first by md5: the init never reaches a tie, so
+    # the reference's unordered tie cannot change its bank
+    "duplicate_ids": (
+        [(6, [0.0, 0.0]), (7, [4.0, 4.0]), (4, [9.0, 0.0]),
+         (1, [0.5, 0.5]), (1, [0.5, 0.5]),
+         (3, [4.5, 3.5]), (3, [8.5, 0.25])],
+        "int", 3, 3),
+    "string_ids": (
+        [("a", [0.0, 0.0]), ("b", [0.1, 0.0]),
+         ("x", [9.0, 9.0]), ("y", [9.1, 9.0])],
+        "string", 2, 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_KMEANS_CASES))
+def test_kmeans_train_matches_reference(spark, case):
+    """kmeans_train (one bounded collect, then the driver loop) gives
+    the reference loop's centroids bit-for-bit — same seeding order,
+    same DECIMAL(30,10) HALF_UP component sums, same rounding."""
     from presto_spark.llm import clustering
-    from tests.conftest import SF_DIR
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    local = clustering.kmeans_train(emb, k=4, n_iters=3)
-    monkeypatch.setattr(clustering, "LOCAL_TRAIN_ROWS", 0)
-    dist = clustering.kmeans_train(emb, k=4, n_iters=3)
-    assert local == dist
+    pts, id_type, k, n_iters = _KMEANS_CASES[case]
+    df = spark.createDataFrame(
+        pts, f"vec_id {id_type}, embedding array<double>")
+    assert (clustering.kmeans_train(df, k=k, n_iters=n_iters)
+            == _kmeans_reference(df, k=k, n_iters=n_iters))
 
 
-def test_kmeans_local_guards_fall_back(spark):
-    """Values inside the HALF_UP boundary band (exact .5 at the 10th
-    fractional digit) or duplicate/NULL ids refuse the local path —
-    kmeans_train still trains via the distributed loop and the two
-    paths agree where both are defined."""
+@pytest.mark.parametrize("sf_dir", ["sf0.001", "sf0.01"])
+@pytest.mark.parametrize("k,n_iters", [(4, 3), (8, 5)])
+def test_kmeans_train_matches_reference_on_embeddings(
+        spark, sf_dir, k, n_iters):
+    from presto_spark.llm import clustering
+    from tests.conftest import SF_DIR, SF_DIR_MID
+
+    path = {"sf0.001": SF_DIR, "sf0.01": SF_DIR_MID}[sf_dir]
+    emb = spark.read.parquet(f"{path}/embeddings.parquet")
+    assert (clustering.kmeans_train(emb, k=k, n_iters=n_iters)
+            == _kmeans_reference(emb, k=k, n_iters=n_iters))
+
+
+def test_kmeans_units_equal_engine_cast(spark):
+    """_quantized_units gives the units of the engine's
+    CAST(x AS DECIMAL(30,10)) on all three tiers: vectorized, the
+    exact Python tier near a .5 boundary (widened with |x|), and the
+    engine query for what neither proves (NaN: NULL, counted as 0)."""
+    import numpy as np
+
     from presto_spark.llm import clustering
 
-    # 5e-11 * 1e10 = 0.5 exactly: the one shape where the vectorized
-    # quantization could diverge from the string-mediated cast.
-    pts = [(0, [5e-11, 0.0]), (1, [1.0, 0.0]),
-           (2, [2.0, 3.0]), (3, [2.2, 3.0])]
+    for x in _STRADDLE:
+        assert clustering._quantize_one_exact(x) is None
+    vals = _STRADDLE + [-v for v in _STRADDLE] + [
+        0.0, -0.0, 0.1, -0.58, 7.99999999995, 8.00000000005, 12.3,
+        -12345.6789012345, 98765.00000000005, 1e-10, 2.5e-10, 3.5e-10,
+        float(np.float32(0.3)), float(np.float32(-0.123456)),
+        # off .5 by more than _HALF_GUARD but inside the widened band:
+        # floor(|x|*1e10 + 0.5) gets each of these wrong
+        97.87146638155, 6200.01701675515, -33536.33337921985,
+        714190.7548059995, float("nan")]
+    X = np.array([vals], dtype=np.float64)
+    got = clustering._quantized_units(spark, X)[0].tolist()
+    cast = spark.createDataFrame([(v,) for v in vals], "x double").select(
+        F.col("x").cast("decimal(30,10)").alias("d")).collect()
+    want = [0 if r.d is None else int(r.d.scaleb(10)) for r in cast]
+    assert got == want
+
+
+def test_kmeans_duplicate_id_tie_is_deterministic(spark):
+    """Duplicate ids tie on the init key; the vector breaks the tie, so
+    the bank does not depend on input order."""
+    from presto_spark.llm import clustering
+
+    pts = [(6, [5.0, 1.0]), (6, [1.0, 2.0]), (7, [3.0, 3.0])]
+    schema = "vec_id int, embedding array<double>"
+    fwd = clustering.kmeans_train(
+        spark.createDataFrame(pts, schema), k=2, n_iters=1)
+    rev = clustering.kmeans_train(
+        spark.createDataFrame(pts[::-1], schema), k=2, n_iters=1)
+    # both id-6 rows seed, [1, 2] first; [3, 3] joins it
+    assert fwd == rev == [[2.0, 2.5], [5.0, 1.0]]
+
+
+@pytest.mark.parametrize("pts,match", [
+    ([(None, [0.0, 0.0]), (1, [1.0, 0.0])], "NULL vec_id"),
+    ([(0, [0.0, 0.0]), (1, None)], "NULL, empty or ragged"),
+    ([(0, []), (1, [])], "NULL, empty or ragged"),
+    ([(0, [0.0, 0.0]), (1, [1.0])], "NULL, empty or ragged"),
+    ([(0, [3e8]), (1, [3e8])], "int64 headroom"),
+], ids=["null_id", "null_vector", "empty_vector", "ragged_vector",
+        "headroom"])
+def test_kmeans_train_rejects_invalid_input(spark, pts, match):
+    from presto_spark.llm import clustering
+
     df = spark.createDataFrame(pts, "vec_id int, embedding array<double>")
-    rows = [(r.vec_id, r.embedding) for r in df.collect()]
-    assert clustering._kmeans_train_local(rows, 2, 2) is None
-    cents = clustering.kmeans_train(df, k=2, n_iters=2)  # distributed
-    assert len(cents) == 2
-    # duplicate ids refuse the local path
-    dup = [(1, [0.0, 0.0]), (1, [1.0, 0.0])]
-    assert clustering._kmeans_train_local(dup, 1, 1) is None
-    # NULL vector refuses
-    nul = [(0, [0.0, 0.0]), (1, None)]
-    assert clustering._kmeans_train_local(nul, 1, 1) is None
+    with pytest.raises(ValueError, match=match):
+        clustering.kmeans_train(df, k=1, n_iters=1)
+
+
+def test_kmeans_train_rejects_rows_over_bound(spark, monkeypatch):
+    from presto_spark.llm import clustering
+
+    df = spark.createDataFrame(
+        [(i, [float(i)]) for i in range(4)],
+        "vec_id int, embedding array<double>")
+    monkeypatch.setattr(clustering, "MAX_TRAIN_ROWS", 4)
+    assert len(clustering.kmeans_train(df, k=2, n_iters=1)) == 2
+    monkeypatch.setattr(clustering, "MAX_TRAIN_ROWS", 3)
+    with pytest.raises(ValueError, match="MAX_TRAIN_ROWS"):
+        clustering.kmeans_train(df, k=2, n_iters=1)
 
 
 def test_kmeans_fit_assign_preserves_id_type(spark):

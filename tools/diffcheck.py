@@ -11,6 +11,9 @@ accident.  A new session shares the SparkContext and copies its
 SparkConf, which is where ``get_spark`` puts ``ENGINE_CONF``.
 
 Usage:  python tools/diffcheck.py [sf_dir] [name_substring...]
+
+The summary counts the selected rows; a filter that selects no row
+exits 1.
 """
 
 from __future__ import annotations
@@ -56,16 +59,24 @@ def normalize(rows: list[tuple], cols: list[str]):
     return sorted((tuple(canon(r[i]) for i in order) for r in rows), key=repr)
 
 
+def select(names, patterns: list[str]) -> list[str]:
+    """The names that contain any of ``patterns`` (all names when none
+    are given), in registry order."""
+    return [n for n in names if not patterns or any(p in n for p in patterns)]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    patterns = sys.argv[2:]
+    names = select(REGISTRY, sys.argv[2:])
+    if not names:
+        print(f"no registry row matches {sys.argv[2:]}")
+        return 1
     spark = get_spark("diffcheck")
     con = duck_connect(sf_dir)
 
     failures = []
-    for name, q in REGISTRY.items():
-        if patterns and not any(p in name for p in patterns):
-            continue
+    for name in names:
+        q = REGISTRY[name]
         t0 = time.time()
         try:
             sdf = q.spark(spark.newSession(), sf_dir)
@@ -103,7 +114,7 @@ def main() -> int:
         else:
             print(f"ok {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
 
-    print(f"\n{len(REGISTRY) - len(failures)}/{len(REGISTRY)} ok")
+    print(f"\n{len(names) - len(failures)}/{len(names)} ok")
     return 1 if failures else 0
 
 
