@@ -24,6 +24,8 @@ import os
 import re
 from dataclasses import dataclass
 
+from presto_spark.prepared import param_positions, split_args, substitute
+
 REFERENCE_TESTS_DIR = (
     "/root/reference/presto-tests/src/main/java/com/facebook/presto/tests"
 )
@@ -177,38 +179,6 @@ def _local_string_var(src: str, before: int, ident: str) -> str | None:
     return None
 
 
-def _bind_positional(text: str, args: list[str]) -> str | None:
-    """Replace each top-level ``?`` in the prepared SQL with the
-    corresponding USING argument (parenthesized); ?s inside SQL string
-    literals are data.  None on arity mismatch."""
-    out: list[str] = []
-    i, ai, in_str = 0, 0, False
-    while i < len(text):
-        c = text[i]
-        if in_str:
-            out.append(c)
-            if c == "'":
-                if i + 1 < len(text) and text[i + 1] == "'":
-                    out.append("'")
-                    i += 2
-                    continue
-                in_str = False
-            i += 1
-            continue
-        if c == "'":
-            in_str = True
-        elif c == "?":
-            if ai >= len(args):
-                return None
-            out.append("(" + args[ai].strip() + ")")
-            ai += 1
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out) if ai == len(args) else None
-
-
 def _recover_execute(src: str, call_start: int, sql: str) -> str | None:
     m = _EXECUTE_SQL_RE.match(sql)
     if not m:
@@ -230,9 +200,11 @@ def _recover_execute(src: str, call_start: int, sql: str) -> str | None:
         text = _local_string_var(src, last.start(), pargs[1].strip())
     if text is None:
         return None
-    if using is None:
-        return text if "?" not in text else None
-    return _bind_positional(text, _split_top_level_args(using))
+    # bind the USING arguments into the ?s as Engine's EXECUTE does
+    args = split_args(using) if using else []
+    if len(param_positions(text)) != len(args):
+        return None
+    return substitute(text, args)
 
 
 # 2-arg assertQuery(ident, literal) is ambiguous: the identifier can be

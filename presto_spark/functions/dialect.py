@@ -8,17 +8,19 @@ registry.py can't cover them) and a few functions whose Presto name
 collides with a Spark builtin of different semantics (Spark refuses to
 let a SQL UDF shadow a builtin).  This module rewrites those spellings.
 
-The rewrite is regex-based on word-boundary + '(' — deliberately
-lightweight: it does not parse SQL, so a string literal containing e.g.
-``"cardinality("`` would be rewritten too.  Documented limitation; the
-alternative (full ANTLR transpile) is out of scope and the Spark parser
-catches any mis-rewrite loudly.
+The rewrites are regexes over the text, applied only where a match
+starts in code: which text is code (not a string literal, a quoted
+identifier or a comment), where a bracket closes and where an argument
+list splits all come from presto_spark/sql_lex.py, the one home of the
+lexical rules.  No pass parses SQL; the Spark parser catches any
+mis-rewrite loudly.
 """
 
 from __future__ import annotations
 
 import re
 
+from presto_spark import sql_lex
 from presto_spark.functions import teradata as _teradata
 from presto_spark.functions.datetime_formats import (
     UnsupportedPatternError,
@@ -54,35 +56,12 @@ _simple_renames_re = re.compile(
     r"\b(" + "|".join(_SIMPLE_MAP) + r")\s*\(", re.IGNORECASE
 )
 
-# Matches one SQL string literal (with '' escapes) — used to keep every
-# regex rewrite pass out of literal text.
-_sql_string_re = re.compile(r"'(?:[^']|'')*'")
-
-
-def _sub_outside_strings(pat: re.Pattern, repl, sql: str) -> str:
-    """pat.sub(repl, ...) applied only to the code between string
-    literals — 'a[1]' or 'date_add' inside quotes must never rewrite."""
-    out = []
-    pos = 0
-    for m in _sql_string_re.finditer(sql):
-        out.append(pat.sub(repl, sql[pos:m.start()]))
-        out.append(m.group(0))
-        pos = m.end()
-    out.append(pat.sub(repl, sql[pos:]))
-    return "".join(out)
-
-
-def _string_spans(sql: str) -> list[tuple[int, int]]:
-    """[start, end) spans of every string literal — the call-scanner
-    passes below skip matches that start inside one, so a literal like
-    '... AS MAP(a, b)' is never rewritten.  (The scanners only read from
-    their input and append to an output list, so spans computed once on
-    the input stay valid for the whole pass.)"""
-    return [(m.start(), m.end()) for m in _sql_string_re.finditer(sql)]
-
-
-def _in_string(spans: list[tuple[int, int]], i: int) -> bool:
-    return any(s <= i < e for s, e in spans)
+# One string literal ('' escapes included), its body in group 1: the
+# building block of the patterns that match a literal as a value (a
+# literal argument, a typed or a Unicode literal).  Which text is a
+# literal and which is code is decided in presto_spark/sql_lex.py, the
+# one home of the lexical rules.
+_sql_string_re = re.compile(r"'((?:[^']|'')*)'")
 
 # Presto array subscripts are 1-based and arr[1] is the FIRST
 # element (ArraySubscriptOperator.java); Spark's [] is 0-based — a
@@ -91,7 +70,7 @@ def _in_string(spans: list[tuple[int, int]], i: int) -> bool:
 # which is 1-based in Spark, matching Presto. Map access uses
 # string/expression keys and is left alone (same semantics in both).
 # (ARRAY[1] is a literal constructor, not a subscript — skip it.)
-# Applied via _sub_outside_strings: 'a[1]' inside a literal stays put.
+# Applied via sql_lex.sub: 'a[1]' inside a literal stays put.
 _SUBSCRIPT_RULE: tuple[re.Pattern[str], object] = (
     re.compile(r"\b(\w+(?:\.\w+)*)\[(\d+)\]"),
     lambda m: m.group(0) if m.group(1).lower() == "array"
@@ -169,50 +148,6 @@ _DT_FORMAT_FNS = {
 _dt_call_re = re.compile(
     r"\b(" + "|".join(_DT_FORMAT_FNS) + r")\s*\(", re.IGNORECASE
 )
-
-_literal_re = re.compile(r"^'((?:[^']|'')*)'$")
-
-
-def _split_call(sql: str, open_paren: int):
-    """Scan from the '(' at ``open_paren``; return (args, close_index) with
-    args split at top-level commas, or None if unbalanced.
-
-    Tracks '['/']' alongside parens: commas inside ARRAY[...] literals
-    and subscripts (arr[i]) are not argument separators."""
-    depth = 0
-    bdepth = 0
-    in_str = False
-    args: list[str] = []
-    start = open_paren + 1
-    i = open_paren
-    while i < len(sql):
-        c = sql[i]
-        if in_str:
-            if c == "'":
-                # '' escape stays inside the string
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(sql[start:i])
-                return args, i
-        elif c == "[":
-            bdepth += 1
-        elif c == "]":
-            bdepth -= 1
-        elif c == "," and depth == 1 and bdepth == 0:
-            args.append(sql[start:i])
-            start = i + 1
-        i += 1
-    return None
-
 
 # MySQL %v (ISO week 01-53) / %x (ISO week-year) are Presto-supported
 # (DateTimeFunctions.java rejects only %D/%U/%u/%V/%w/%X) but java.time
@@ -351,78 +286,43 @@ def _joda_unquote(p: str) -> str:
     return "".join(out)
 
 
-def _rewrite_datetime_formats(sql: str) -> str:
-    out = []
-    pos = 0
-    spans = _string_spans(sql)
-    while True:
-        m = _dt_call_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        args, close = parsed
-        lit = _literal_re.match(args[-1].strip()) if len(args) == 2 else None
-        if lit is None:
-            if len(args) == 2:
-                # Column-valued pattern: Presto evaluates patterns per row
-                # (DateTimeFunctions.java) — route to the Arrow-batched
-                # Python renderer instead of silently falling through to
-                # java.time semantics.
-                out.append(sql[pos:m.start()])
-                out.append(f"{m.group(1).lower()}_py({args[0].strip()}, "
-                           f"{args[1].strip()})")
-            else:
-                out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        target, xlate = _DT_FORMAT_FNS[m.group(1).lower()]
-        raw = lit.group(1).replace("''", "'")
-        if m.group(1).lower() == "date_format":
-            cf = _mysql_concat_form(args[0].strip(), raw)
-            if cf is not None:
-                out.append(sql[pos:m.start()])
-                out.append(cf)
-                pos = close + 1
-                continue
-        if m.group(1).lower() == "format_datetime":
-            cf = _joda_concat_form(args[0].strip(), raw)
-            if cf is not None:
-                out.append(sql[pos:m.start()])
-                out.append(cf)
-                pos = close + 1
-                continue
-        if xlate is mysql_to_java and "%" not in raw:
-            # No %-specifiers: either already java.time (idempotent
-            # re-translate) or a degenerate all-literal pattern — leave it.
-            out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        try:
-            java = xlate(raw)
-        except UnsupportedPatternError:
-            out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        out.append(sql[pos:m.start()])
-        # The /*dt*/ marker (stripped by Spark's lexer) keeps the
-        # emitted java-pattern call out of the Teradata to_date/
-        # to_timestamp macros, whose format grammar overlaps java.time
-        # spellings ('mm' means month in Teradata, minute in java.time).
-        out.append(
-            f"{target}/*dt*/({args[0].strip()}, "
-            f"'{java.replace(chr(39), chr(39) * 2)}')"
-        )
-        pos = close + 1
-    return "".join(out)
+def _datetime_format_call(call: sql_lex.Call) -> str:
+    """The Spark form of one datetime-format call; a call left as
+    written is returned whole, so the calls nested in it stay too."""
+    args, name = call.args, call.match.group(1).lower()
+    lit = _sql_string_re.fullmatch(args[-1].strip()) if len(args) == 2 else None
+    if lit is None:
+        if len(args) == 2:
+            # Column-valued pattern: Presto evaluates patterns per row
+            # (DateTimeFunctions.java) — route to the Arrow-batched
+            # Python renderer instead of silently falling through to
+            # java.time semantics.
+            return f"{name}_py({args[0].strip()}, {args[1].strip()})"
+        return call.text
+    target, xlate = _DT_FORMAT_FNS[name]
+    raw = lit.group(1).replace("''", "'")
+    if name == "date_format":
+        cf = _mysql_concat_form(args[0].strip(), raw)
+        if cf is not None:
+            return cf
+    if name == "format_datetime":
+        cf = _joda_concat_form(args[0].strip(), raw)
+        if cf is not None:
+            return cf
+    if xlate is mysql_to_java and "%" not in raw:
+        # No %-specifiers: either already java.time (idempotent
+        # re-translate) or a degenerate all-literal pattern — leave it.
+        return call.text
+    try:
+        java = xlate(raw)
+    except UnsupportedPatternError:
+        return call.text
+    # The /*dt*/ marker (stripped by Spark's lexer) keeps the emitted
+    # java-pattern call out of the Teradata to_date/to_timestamp
+    # macros, whose format grammar overlaps java.time spellings ('mm'
+    # means month in Teradata, minute in java.time).
+    return (f"{target}/*dt*/({args[0].strip()}, "
+            f"'{java.replace(chr(39), chr(39) * 2)}')")
 
 
 # --- extended-JSONPath routing ---------------------------------------------
@@ -444,44 +344,17 @@ _EXTENDED_PATH = re.compile(
 )
 
 
-def _rewrite_jsonpath_calls(sql: str) -> str:
-    out = []
-    pos = 0
-    spans = _string_spans(sql)
-    while True:
-        m = _json_call_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        args, close = parsed
-        lit = _literal_re.match(args[-1].strip()) if len(args) == 2 else None
-        if lit is None and len(args) == 2:
-            # Column-valued path: Spark's get_json_object requires a
-            # foldable path, so this would fail loudly JVM-side — the
-            # Python JSONPath evaluator handles per-row paths.
-            out.append(sql[pos:m.start()])
-            out.append(f"{m.group(1).lower()}_py({args[0].strip()}, "
-                       f"{args[1].strip()})")
-            pos = close + 1
-            continue
-        if lit is None or not _EXTENDED_PATH.search(lit.group(1)):
-            out.append(sql[pos:close + 1])
-            pos = close + 1
-            continue
-        out.append(sql[pos:m.start()])
-        out.append(f"{m.group(1).lower()}_py({args[0].strip()}, "
-                   f"'{lit.group(1)}')")
-        pos = close + 1
-    return "".join(out)
+def _jsonpath_call(call: sql_lex.Call) -> str:
+    args, name = call.args, call.match.group(1).lower()
+    lit = _sql_string_re.fullmatch(args[-1].strip()) if len(args) == 2 else None
+    if lit is None and len(args) == 2:
+        # Column-valued path: Spark's get_json_object requires a
+        # foldable path, so this would fail loudly JVM-side — the
+        # Python JSONPath evaluator handles per-row paths.
+        return f"{name}_py({args[0].strip()}, {args[1].strip()})"
+    if lit is None or not _EXTENDED_PATH.search(lit.group(1)):
+        return call.text
+    return f"{name}_py({args[0].strip()}, '{lit.group(1)}')"
 
 
 # --- polymorphic macro expansion -------------------------------------------
@@ -1086,88 +959,47 @@ _macro_call_re = re.compile(
 )
 
 # Presto ARRAY[...] literal constructor (SqlBase.g4 primaryExpression
-# ARRAY '[' ... ']') — Spark only parses array(...).  Stack-based scan:
-# '[' opened by the ARRAY keyword closes as ')', every other '[' (a
-# subscript) closes as ']'; string literals pass through untouched.
+# ARRAY '[' ... ']') — Spark only parses array(...): the keyword and its
+# '[' become array( and the matching ']' becomes ')'; every other '[' (a
+# subscript) stays.
 _array_lit_re = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
 
 
 def _rewrite_array_literals(sql: str) -> str:
-    if _array_lit_re.search(sql) is None:
-        return sql
-    out: list[str] = []
-    stack: list[bool] = []  # True = bracket opened by ARRAY keyword
-    in_str = False
-    i = 0
-    while i < len(sql):
-        c = sql[i]
-        if in_str:
-            out.append(c)
-            if c == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    out.append("'")
-                    i += 2
-                    continue
-                in_str = False
-        elif c == "'":
-            out.append(c)
-            in_str = True
-        elif (m := _array_lit_re.match(sql, i)) is not None:
-            out.append("array(")
-            stack.append(True)
-            i = m.end()
-            continue
-        elif c == "[":
-            out.append(c)
-            stack.append(False)
-        elif c == "]":
-            out.append(")" if stack and stack.pop() else "]")
-        else:
-            out.append(c)
-        i += 1
-    return "".join(out)
+    lx = sql_lex.Lexed(sql)
+    edits = []
+    for m in lx.matches(_array_lit_re):
+        edits.append((m.start(), m.end(), "array("))
+        if (close := lx.close.get(m.end() - 1)) is not None:
+            edits.append((close, close + 1, ")"))
+    return sql_lex.splice(sql, sorted(edits))
 
 
 # Integer subscripts whose base is a parenthesized expression — e.g.
 # ARRAY[10,20][1], which _rewrite_array_literals turns into
 # array(10, 20)[1] — would silently hit Spark's 0-based [] (a silent
 # off-by-one vs Presto's 1-based ArraySubscriptOperator.java).  Rewrite
-# call-result/paren bases to element_at by scanning back to the matching
-# '(' plus any callee name.  Runs after _rewrite_array_literals.
+# call-result/paren bases to element_at: the base runs from the '('
+# matching the ')' plus any callee name.  Runs after
+# _rewrite_array_literals.
 _paren_subscript_re = re.compile(r"\)\s*\[(\d+)\]")
+
+
+def _name_start(sql: str, i: int) -> int:
+    """Start of the (dotted) name that ends at ``i``."""
+    while i > 0 and (sql[i - 1].isalnum() or sql[i - 1] in "_."):
+        i -= 1
+    return i
 
 
 def _rewrite_paren_subscripts(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = None
-        for cand in _paren_subscript_re.finditer(sql):
-            if not _in_string(spans, cand.start()):
-                m = cand
-                break
-        if m is None:
+        lx = sql_lex.Lexed(sql)
+        m = next(lx.matches(_paren_subscript_re), None)
+        if m is None or m.start() not in lx.opener:  # unbalanced: leave
             return sql
-        # Find the '(' matching the ')' at m.start(), skipping literals.
-        depth = 0
-        j = m.start()
-        while j >= 0:
-            if _in_string(spans, j):
-                j -= 1
-                continue
-            if sql[j] == ")":
-                depth += 1
-            elif sql[j] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
-        if j < 0:  # unbalanced — leave untouched
-            return sql
-        k = j - 1
-        while k >= 0 and (sql[k].isalnum() or sql[k] in "_."):
-            k -= 1
-        base = sql[k + 1:m.start() + 1]
-        sql = (sql[:k + 1] + f"element_at({base}, {m.group(1)})"
+        k = _name_start(sql, lx.opener[m.start()])
+        sql = (sql[:k] + f"element_at({sql[k:m.start() + 1]}, {m.group(1)})"
                + sql[m.end():])
 
 
@@ -1197,10 +1029,7 @@ def _type_to_spark(t: str) -> str:
             lambda s: _SCALAR_TYPE_MAP[s.group(1).lower()], t
         )
     kind, inner = m.group(1).upper(), m.group(2)
-    parts = []
-    parsed = _split_call("(" + inner + ")", 0)
-    if parsed is not None:
-        parts = parsed[0]
+    parts = sql_lex.Lexed(inner).args(-1)
     if kind == "ARRAY":
         return f"ARRAY<{_type_to_spark(parts[0] if parts else inner)}>"
     if kind == "MAP":
@@ -1218,27 +1047,9 @@ def _type_to_spark(t: str) -> str:
 
 
 def _rewrite_type_positions(sql: str) -> str:
-    out, pos = [], 0
-    spans = _string_spans(sql)
-    while True:
-        m = _type_pos_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        _, close = parsed
-        out.append(sql[pos:m.start()])
-        out.append("AS " + _type_to_spark(sql[m.start() + 2:close + 1].strip()))
-        pos = close + 1
-    return "".join(out)
+    return sql_lex.rewrite_calls(
+        sql, _type_pos_re,
+        lambda c: "AS " + _type_to_spark(c.text[2:].strip()))
 
 # --- ANSI fetch/offset + typed literals + ROW constructor ----------------
 # FETCH FIRST n ROWS ONLY (SqlBase.g4 limit clause; Presto also allows
@@ -1258,24 +1069,8 @@ _fetch_first_re = re.compile(
 _offset_rows_re = re.compile(r"\bOFFSET\s+(\d+)\s+ROWS?\b", re.IGNORECASE)
 _typed_literal_re = re.compile(
     r"\b(DECIMAL|DOUBLE|REAL|BIGINT|INTEGER|SMALLINT|TINYINT|BOOLEAN"
-    r"|VARCHAR|CHAR|JSON)\s*('(?:[^']|'')*')", re.IGNORECASE)
+    rf"|VARCHAR|CHAR|JSON)\s*({_sql_string_re.pattern})", re.IGNORECASE)
 _row_ctor_re = re.compile(r"\bROW\s*\(", re.IGNORECASE)
-
-
-def _sub_skipping_strings(pat: re.Pattern, repl, sql: str) -> str:
-    """Like _sub_outside_strings, but for patterns whose MATCH itself
-    contains a string literal (e.g. DECIMAL '1.5') — the match must
-    merely START outside any literal."""
-    spans = _string_spans(sql)
-    out, pos = [], 0
-    for m in pat.finditer(sql):
-        if m.start() < pos or _in_string(spans, m.start()):
-            continue
-        out.append(sql[pos:m.start()])
-        out.append(repl(m) if callable(repl) else repl)
-        pos = m.end()
-    out.append(sql[pos:])
-    return "".join(out)
 
 
 def _typed_literal_repl(m: re.Match) -> str:
@@ -1303,38 +1098,24 @@ def _typed_literal_repl(m: re.Match) -> str:
 # quotes identifiers AND function names with double quotes —
 # `"sum"("ss_ext_sales_price") "itemrevenue"`.  Spark's parser uses
 # backticks for identifiers and rejects quoted function names.
-# Rewrite every double-quoted token outside string literals: a quoted
-# name directly followed by '(' becomes the bare function name;
-# anything else becomes a backtick-quoted identifier ("" unescapes to
-# ", which backticks need no escape for).
-_dquote_ident_re = re.compile(r'"((?:[^"]|"")*)"')
-_btick_span_re = re.compile(r"`[^`]*`")
+# Rewrite every double-quoted identifier: a quoted name directly
+# followed by '(' becomes the bare function name; anything else becomes
+# a backtick-quoted identifier ("" unescapes to ", which backticks need
+# no escape for).
+_call_paren_re = re.compile(r"\s*\(")
 
 
 def _rewrite_double_quoted_idents(sql: str) -> str:
-    # backtick spans are protected too: a prior pass may have produced
-    # `a"b` identifiers, and a " inside one must not anchor a match
-    # (idempotency)
-    spans = _string_spans(sql) + [
-        (m.start(), m.end()) for m in _btick_span_re.finditer(sql)
-    ]
-    out: list[str] = []
-    pos = 0
-    for m in _dquote_ident_re.finditer(sql):
-        if _in_string(spans, m.start()) or _in_string(spans, m.end() - 1):
+    edits = []
+    for a, b in sql_lex.Lexed(sql).hidden:
+        if sql[a] != '"' or b - a < 2 or sql[b - 1] != '"':
             continue
-        out.append(sql[pos:m.start()])
-        name = m.group(1).replace('""', '"')
-        j = m.end()
-        while j < len(sql) and sql[j].isspace():
-            j += 1
-        if j < len(sql) and sql[j] == "(" and re.fullmatch(r"\w+", name):
-            out.append(name)
+        name = sql[a + 1:b - 1].replace('""', '"')
+        if _call_paren_re.match(sql, b) and re.fullmatch(r"\w+", name):
+            edits.append((a, b, name))
         else:
-            out.append(f"`{name}`")
-        pos = m.end()
-    out.append(sql[pos:])
-    return "".join(out)
+            edits.append((a, b, f"`{name}`"))
+    return sql_lex.splice(sql, edits)
 
 
 # Window-function frame/order conformance (reference: WindowOperator +
@@ -1359,51 +1140,34 @@ _needs_order = frozenset((
 ))
 
 
+_over_tail_re = re.compile(
+    r"\s*(?:IGNORE\s+NULLS|RESPECT\s+NULLS)?\s*OVER\s*\(", re.IGNORECASE)
+
+
 def _rewrite_rankish_windows(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        changed = False
-        for m in _rankish_over_re.finditer(sql):
-            if _in_string(spans, m.start()):
+        lx = sql_lex.Lexed(sql)
+        for call in lx.calls(_rankish_over_re):
+            tail = _over_tail_re.match(sql, call.close + 1)
+            if tail is None or tail.end() - 1 not in lx.close:
                 continue
-            parsed = _split_call(sql, m.end() - 1)
-            if parsed is None:
-                continue
-            _, close = parsed
-            j = close + 1
-            tail = re.match(
-                r"\s*(?:IGNORE\s+NULLS|RESPECT\s+NULLS)?\s*OVER\s*\(",
-                sql[j:], re.IGNORECASE)
-            if tail is None:
-                continue
-            gopen = j + tail.end() - 1
-            gparsed = _split_call(sql, gopen)
-            if gparsed is None:
-                continue
-            _, gclose = gparsed
-            group = sql[gopen + 1:gclose]
-            new_group = group
-            fm = next(
-                (f for f in _frame_kw_re.finditer(new_group)
-                 if _depth_at(new_group, f.start()) == 0), None)
+            gopen = tail.end() - 1
+            gclose = lx.close[gopen]
+            fm = next(lx.matches(_frame_kw_re, gopen + 1, gclose, gopen), None)
+            cut = gclose if fm is None else fm.start()
+            new_group = sql[gopen + 1:cut]
             if fm is not None:
-                new_group = new_group[:fm.start()].rstrip()
-            has_order = any(
-                _depth_at(new_group, o.start()) == 0
-                for o in _order_by_kw_re.finditer(new_group))
-            if not has_order and m.group(1).lower() in _needs_order:
+                new_group = new_group.rstrip()
+            has_order = next(
+                lx.matches(_order_by_kw_re, gopen + 1, cut, gopen), None)
+            if not has_order and call.match.group(1).lower() in _needs_order:
                 sep = " " if new_group.strip() else ""
                 new_group = new_group.rstrip() + sep + "ORDER BY 1"
-            if new_group != group:
+            if new_group != sql[gopen + 1:gclose]:
                 sql = sql[:gopen + 1] + new_group + sql[gclose:]
-                changed = True
                 break  # offsets shifted — rescan
-        if not changed:
+        else:
             return sql
-
-
-def _depth_at(s: str, i: int) -> int:
-    return s.count("(", 0, i) - s.count(")", 0, i)
 
 
 # Quantified comparisons (SqlBase.g4 quantifiedComparison; Presto
@@ -1419,59 +1183,39 @@ _quantified_re = re.compile(
     r"(<=|>=|<>|!=|=|<|>)\s*(ANY|ALL|SOME)\s*\(", re.IGNORECASE)
 
 
-def _scan_left_operand(sql: str, before: int,
-                       spans: list[tuple[int, int]]) -> tuple[int, int]:
+# A type word spelling a typed literal (TIMESTAMP '...', X'0a', ...):
+# part of a left operand that ends in a string literal.
+_literal_type_tail_re = re.compile(
+    r"\b(?:DATE|TIME|TIMESTAMP|X|DECIMAL|DOUBLE|REAL|BIGINT|INTEGER"
+    r"|SMALLINT|TINYINT|BOOLEAN|VARCHAR|CHAR|JSON)\s*\Z", re.IGNORECASE)
+
+
+def _left_operand(lx: sql_lex.Lexed, before: int) -> tuple[int, int]:
     """[start, end) of the value expression ending just before
-    `before`: a call/paren group (with optional function name), a
-    string literal, or an identifier/number/dotted path."""
-    i = before - 1
-    while i >= 0 and sql[i].isspace():
-        i -= 1
-    end = i + 1
-    if i >= 0 and sql[i] == ")":
-        depth = 0
-        while i >= 0:
-            if _in_string(spans, i):
-                i -= 1
-                continue
-            if sql[i] == ")":
-                depth += 1
-            elif sql[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
-        i -= 1
-        while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-            i -= 1
-    elif i >= 0 and sql[i] == "'":
-        sp = next((s for s in spans if s[0] <= i < s[1]), None)
-        if sp is None:
-            return end, end
-        i = sp[0] - 1
-    else:
-        while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-            i -= 1
-    return i + 1, end
+    ``before``: a call/paren group (with optional function name), a
+    (typed) string literal, or an identifier/number/dotted path."""
+    sql = lx.text
+    end = lx.code_end(0, before)
+    span = lx.span_at(end - 1) if end else None
+    if span is not None and sql[span[0]] == "'":
+        t = _literal_type_tail_re.search(sql, 0, span[0])
+        return (span[0] if t is None else t.start()), end
+    return _name_start(sql, lx.opener.get(end - 1, end)), end
 
 
 def _rewrite_quantified_comparisons(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = next((c for c in _quantified_re.finditer(sql)
-                  if not _in_string(spans, c.start())), None)
-        if m is None:
+        lx = sql_lex.Lexed(sql)
+        m = next(lx.matches(_quantified_re), None)
+        if m is None or m.end() - 1 not in lx.close:
             return sql
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            return sql
-        _, close = parsed
+        close = lx.close[m.end() - 1]
         sub = sql[m.end():close]
         op = m.group(1)
         quant = m.group(2).upper()
         if quant == "SOME":
             quant = "ANY"
-        start, end = _scan_left_operand(sql, m.start(), spans)
+        start, end = _left_operand(lx, m.start())
         lhs = sql[start:end].strip()
         if not lhs:
             return sql
@@ -1524,21 +1268,16 @@ def _rewrite_quantified_comparisons(sql: str) -> str:
 
 # `x IN (VALUES ...)` (SqlBase.g4 inList accepts a query): Spark's IN
 # wants a SELECT subquery or an expression list — wrap the VALUES.
-_in_values_re = re.compile(r"\bIN\s*\(\s*VALUES\b", re.IGNORECASE)
+_in_values_re = re.compile(r"\bIN\s*(\()\s*VALUES\b", re.IGNORECASE)
 
 
 def _rewrite_in_values(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = next((c for c in _in_values_re.finditer(sql)
-                  if not _in_string(spans, c.start())), None)
-        if m is None:
+        lx = sql_lex.Lexed(sql)
+        m = next(lx.matches(_in_values_re), None)
+        if m is None or m.start(1) not in lx.close:
             return sql
-        open_paren = sql.index("(", m.start())
-        parsed = _split_call(sql, open_paren)
-        if parsed is None:
-            return sql
-        _, close = parsed
+        open_paren, close = m.start(1), lx.close[m.start(1)]
         inner = sql[open_paren + 1:close]
         # the alias matters: Spark mis-parses an IN-list
         # `(SELECT * FROM (...))` without one
@@ -1555,111 +1294,51 @@ def _rewrite_in_values(sql: str) -> str:
 # items that already carry a directive are left alone.
 _order_by_kw_re = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
 _nulls_dir_re = re.compile(r"\bNULLS\s+(?:FIRST|LAST)\s*$", re.IGNORECASE)
-_sortlist_end_words = frozenset((
-    "limit", "offset", "fetch", "rows", "range", "groups", "union",
-    "intersect", "except", "having", "window",
-))
-_ident_re = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# a sort-item list ends at its enclosing ')', a ';' or a clause keyword
+_sortlist_end_re = re.compile(
+    r";|\b(?:limit|offset|fetch|rows|range|groups|union|intersect|except"
+    r"|having|window)\b", re.IGNORECASE)
 
 
 def _rewrite_order_by_null_defaults(sql: str) -> str:
-    spans = _string_spans(sql)
-    out: list[str] = []
+    lx = sql_lex.Lexed(sql)
+    at: list[int] = []  # where a NULLS LAST goes
     pos = 0
-    while True:
-        m = _order_by_kw_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
+    for m in lx.matches(_order_by_kw_re):
+        if m.start() < pos:
             continue
-        out.append(sql[pos:m.end()])
-        # scan the sort-item list: items split on top-level commas;
-        # the list ends at an unbalanced ')' / ';' / a clause keyword.
-        i = m.end()
-        depth = 0
-        item_start = i
-        bounds: list[tuple[int, int]] = []
-        while i < len(sql):
-            if _in_string(spans, i):
-                i += 1
-                continue
-            ch = sql[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif ch == ";" and depth == 0:
-                break
-            elif ch == "," and depth == 0:
-                bounds.append((item_start, i))
-                item_start = i + 1
-            elif depth == 0 and (ch.isalpha() or ch == "_") and (
-                i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-            ):
-                w = _ident_re.match(sql, i)
-                if w and w.group(0).lower() in _sortlist_end_words:
-                    break
-                i = w.end() - 1 if w else i
-            i += 1
-        bounds.append((item_start, i))
-        for k, (a, b) in enumerate(bounds):
-            item = sql[a:b]
-            stripped = item.rstrip()
-            if stripped.strip() and not _nulls_dir_re.search(stripped):
-                item = stripped + " NULLS LAST" + item[len(stripped):]
-            out.append(item)
-            if k < len(bounds) - 1:
-                out.append(",")
-        pos = i
-    # unreachable
+        g = lx.enclosing(m.start())
+        end = lx.close.get(g, len(sql))
+        stop = next(lx.matches(_sortlist_end_re, m.end(), end, g), None)
+        end = end if stop is None else stop.start()
+        bounds = [m.end() - 1, *(c for c in lx.commas[g]
+                                 if m.end() <= c < end), end]
+        for a, b in zip(bounds, bounds[1:]):
+            e = lx.code_end(a + 1, b)
+            item = sql[a + 1:e]
+            if item.strip() and not _nulls_dir_re.search(item):
+                at.append(e)
+        pos = end
+    return sql_lex.splice(sql, [(i, i, " NULLS LAST") for i in at])
 
 
 def _rewrite_limit_grammar(sql: str) -> str:
-    sql = _sub_outside_strings(
+    sql = sql_lex.sub(
         _offset_fetch_re,
         lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}", sql)
-    sql = _sub_outside_strings(
+    sql = sql_lex.sub(
         _fetch_first_re, lambda m: f"LIMIT {m.group(1) or 1}", sql)
-    return _sub_outside_strings(
+    return sql_lex.sub(
         _offset_rows_re, lambda m: f"OFFSET {m.group(1)}", sql)
 
 
 def _rewrite_calls(sql: str, call_re: re.Pattern, build) -> str:
     """Generic top-level-call rewriter: for each call matching
-    ``call_re`` outside string literals, ``build(name, args)`` returns
-    replacement text or None to leave the call as written (its nested
-    calls are then still scanned)."""
-    out, pos = [], 0
-    spans = _string_spans(sql)
-    while True:
-        m = call_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        if _in_string(spans, m.start()):
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        parsed = _split_call(sql, m.end() - 1)
-        if parsed is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        args, close = parsed
-        repl = build(m.group(1).lower(), [a.strip() for a in args])
-        if repl is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
-            continue
-        out.append(sql[pos:m.start()])
-        out.append(repl)
-        pos = close + 1
-    return "".join(out)
+    ``call_re`` in code, ``build(name, args)`` returns replacement text
+    or None to leave the call as written (its nested calls are then
+    still scanned)."""
+    return sql_lex.rewrite_calls(sql, call_re, lambda c: build(
+        c.match.group(1).lower(), [a.strip() for a in c.args]))
 
 
 # approx_distinct → approx_count_distinct carrying Presto's DEFAULT
@@ -1768,40 +1447,24 @@ _agg_tail_re = re.compile(
 
 def _rewrite_array_agg(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        hit = None
-        for m in _array_agg_re.finditer(sql):
-            if _in_string(spans, m.start()):
-                continue
-            parsed = _split_call(sql, m.end() - 1)
-            if parsed is None:
-                continue
-            args, close = parsed
-            if len(args) != 1 or re.search(
-                    r"(?is)^\s*DISTINCT\b|\bORDER\s+BY\b", args[0]):
-                continue
-            if "_ps_v" in args[0]:  # already-rewritten inner call
-                continue
-            hit = (m, args[0].strip(), close)
-            break
-        if hit is None:
+        lx = sql_lex.Lexed(sql)
+        call = next((c for c in lx.calls(_array_agg_re)
+                     if len(c.args) == 1 and not re.search(
+                         r"(?is)^\s*DISTINCT\b|\bORDER\s+BY\b", c.args[0])
+                     # not an already-rewritten inner call
+                     and "_ps_v" not in c.args[0]), None)
+        if call is None:
             return sql
-        m, arg, close = hit
-        end = close + 1
+        end = call.close + 1
         tail = ""
-        while True:
-            t = _agg_tail_re.match(sql, end)
-            if t is None:
-                break
-            p = _split_call(sql, t.end() - 1)
-            if p is None:
-                break
-            tail += sql[end:p[1] + 1]
-            end = p[1] + 1
-        base = f"collect_list(struct(({arg}) AS _ps_v)){tail}"
+        while (t := _agg_tail_re.match(sql, end)) and t.end() - 1 in lx.close:
+            close = lx.close[t.end() - 1]
+            tail += sql[end:close + 1]
+            end = close + 1
+        base = f"collect_list(struct(({call.args[0].strip()}) AS _ps_v)){tail}"
         repl = (f"CASE WHEN size({base}) = 0 THEN NULL ELSE "
                 f"transform({base}, _ps_s -> _ps_s._ps_v) END")
-        sql = sql[:m.start()] + repl + sql[end:]
+        sql = sql[:call.match.start()] + repl + sql[end:]
 
 
 # Zero-argument count() (Presto's CountAggregation accepts it as
@@ -1820,12 +1483,12 @@ def _build_count(_name: str, args: list[str]) -> str | None:
 # character introduces a 4-hex-digit code point, or a 6-digit one
 # with a '+'; a doubled escape character is the literal character.
 _unicode_str_re = re.compile(
-    r"U&('(?:[^']|'')*')(?:\s+UESCAPE\s+'(.)')?", re.IGNORECASE)
+    rf"U&({_sql_string_re.pattern})(?:\s+UESCAPE\s+'(.)')?", re.IGNORECASE)
 
 
 def _decode_unicode_literal(m: re.Match) -> str:
     body = m.group(1)[1:-1]
-    esc = m.group(2) or "\\"
+    esc = m.group(3) or "\\"
     out, i = [], 0
     while i < len(body):
         c = body[i]
@@ -1954,7 +1617,7 @@ def _build_split(_name: str, args: list[str]) -> str | None:
         return None
     if len(args) == 3 and args[2] == "-1":
         return None  # regexp_split marker — the pattern is a real regex
-    lit = _literal_re.match(args[1])
+    lit = _sql_string_re.fullmatch(args[1])
     if lit is None:
         return None
     raw = lit.group(1).replace("''", "'")
@@ -1978,65 +1641,21 @@ def _build_split(_name: str, args: list[str]) -> str | None:
 _at_tz_re = re.compile(r"\bAT\s+TIME\s+ZONE\b", re.IGNORECASE)
 
 
+_zone_name_re = re.compile(r"\s*([\w.]*)")
+
+
 def _rewrite_at_time_zone(sql: str) -> str:
     while True:
-        spans = _string_spans(sql)
-        m = next((c for c in _at_tz_re.finditer(sql)
-                  if not _in_string(spans, c.start())), None)
+        lx = sql_lex.Lexed(sql)
+        m = next(lx.matches(_at_tz_re), None)
         if m is None:
             return sql
-        i = m.start() - 1
-        while i >= 0 and sql[i].isspace():
-            i -= 1
-        end_l = i + 1
-        if i >= 0 and sql[i] == ")":
-            depth = 0
-            while i >= 0:
-                if _in_string(spans, i):
-                    i -= 1
-                    continue
-                if sql[i] == ")":
-                    depth += 1
-                elif sql[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i -= 1
-            i -= 1
-            while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-                i -= 1
-        elif i >= 0 and sql[i] == "'":
-            sp = next((s for s in spans if s[0] <= i < s[1]), None)
-            if sp is None:
-                return sql
-            i = sp[0] - 1
-            while i >= 0 and sql[i].isspace():
-                i -= 1
-            while i >= 0 and (sql[i].isalnum() or sql[i] == "_"):
-                i -= 1
-        else:
-            while i >= 0 and (sql[i].isalnum() or sql[i] in "_."):
-                i -= 1
-        start_l = i + 1
+        start_l, end_l = _left_operand(lx, m.start())
         left = sql[start_l:end_l].strip()
-        j = m.end()
-        while j < len(sql) and sql[j].isspace():
-            j += 1
-        if j < len(sql) and sql[j] == "'":
-            k = j + 1
-            while k < len(sql):
-                if sql[k] == "'":
-                    if k + 1 < len(sql) and sql[k + 1] == "'":
-                        k += 2
-                        continue
-                    break
-                k += 1
-            end_r = k + 1
-        else:
-            k = j
-            while k < len(sql) and (sql[k].isalnum() or sql[k] in "_."):
-                k += 1
-            end_r = k
+        zone = _zone_name_re.match(sql, m.end())
+        j = zone.start(1)
+        span = lx.span_at(j)
+        end_r = span[1] if span is not None and sql[j] == "'" else zone.end()
         if not left or end_r == j:
             return sql
         sql = (sql[:start_l] + f"tswtz({left}, {sql[j:end_r]})"
@@ -2099,8 +1718,9 @@ def _unnest_arg_specs(args: list[str]) -> list[tuple[str, str, int]]:
         # arrive as array(struct(...)); accept the raw spelling too
         rm = re.match(r"(?is)^\s*ARRAY\s*[\[(]\s*struct\s*\(", a)
         if rm:
-            parsed = _split_call(a, rm.end() - 1)
-            specs.append((a, "rowarray", len(parsed[0]) if parsed else 1))
+            lx = sql_lex.Lexed(a)
+            specs.append((a, "rowarray", len(lx.args(rm.end() - 1))
+                          if rm.end() - 1 in lx.close else 1))
             continue
         specs.append((a, "array", 1))
     return specs
@@ -2158,19 +1778,12 @@ def _unnest_inner_select(args: list[str], cols: list[str], ordinal: bool) -> str
 
 def _rewrite_unnest(sql: str) -> str:
     out, pos = [], 0
-    spans = _string_spans(sql)
-    while True:
-        m = _unnest_re.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            break
-        parsed = None if _in_string(spans, m.start()) else _split_call(sql, m.end() - 1)
-        tail = parsed and _unnest_tail_re.match(sql, parsed[1] + 1)
-        if not tail:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
+    for call in sql_lex.Lexed(sql).calls(_unnest_re):
+        m = call.match
+        if m.start() < pos:
             continue
-        args = [a.strip() for a in parsed[0]]
+        tail = _unnest_tail_re.match(sql, call.close + 1)
+        args = [a.strip() for a in call.args]
         alias = tail.group(2) or "_ps_unnest"
         if tail.group(3):
             cols = [c.strip() for c in tail.group(3).split(",")]
@@ -2184,23 +1797,15 @@ def _rewrite_unnest(sql: str) -> str:
                 cols.append("ordinality")
         inner = _unnest_inner_select(args, cols, tail.group(1) is not None)
         if inner is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
             continue
         prefix = sql[pos:m.start()]
         pm = _unnest_prefix_re.search(prefix)
         if pm is None:
-            out.append(sql[pos:m.end()])
-            pos = m.end()
             continue
-        kind = pm.group(1).strip().upper()
-        if kind == "FROM":
-            out.append(prefix[:pm.start(1)] + "FROM ")
-            out.append(f"({inner}) {alias}")
-        else:
-            out.append(prefix[:pm.start(1)] + ", LATERAL ")
-            out.append(f"({inner}) {alias}")
+        lead = "FROM" if pm.group(1).strip().upper() == "FROM" else ", LATERAL"
+        out.append(f"{prefix[:pm.start(1)]}{lead} ({inner}) {alias}")
         pos = tail.end()
+    out.append(sql[pos:])
     return "".join(out)
 
 
@@ -2216,121 +1821,65 @@ _TRY_OPS = [("+", "try_add"), ("-", "try_subtract"),
 _try_call_re = re.compile(r"\bTRY\s*\(", re.IGNORECASE)
 
 
+_op_char_re = re.compile(r"[-+*/%<>=!]")
+
+
 def _split_top_binary(expr: str):
     """(lhs, op, rhs) at the lowest-precedence, rightmost top-level binary
     operator, or None.  '[' counts as nesting: ops inside a subscript or
     ARRAY[...] literal are not top-level."""
-    depth = 0
-    in_str = False
     add_idx = mul_idx = None
-    prev = ""
-    for i, c in enumerate(expr):
-        if in_str:
-            if c == "'":
-                in_str = False
-            continue
-        if c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in "<>=!":
+    for m in sql_lex.Lexed(expr).matches(_op_char_re, within=-1):
+        i, c = m.start(), m.group()
+        if c in "<>=!":
             # a top-level COMPARISON binds looser than any arithmetic
             # op: TRY(1 / x != 1000) must unwrap whole, never become
             # try_divide(1, x != 1000)
             return None
-        elif depth == 0 and c in "+-*/%":
-            is_unary = c in "+-" and (prev == "" or prev in "(,+-*/%<>=")
-            if not is_unary:
-                if c in "+-":
-                    add_idx = i
-                else:
-                    mul_idx = i
-        if not c.isspace():
-            prev = c
+        prev = expr[:i].rstrip()[-1:]
+        if c in "+-" and (prev == "" or prev in "(,+-*/%<>="):
+            continue  # unary
+        if c in "+-":
+            add_idx = i
+        else:
+            mul_idx = i
     idx = add_idx if add_idx is not None else mul_idx
     if idx is None:
         return None
     return expr[:idx].strip(), expr[idx], expr[idx + 1:].strip()
 
 
+def _expand_macro(call: sql_lex.Call) -> str | None:
+    # (nargs, build) tuple, or {nargs: build} for overloaded arities
+    # (regexp_extract 2- and 3-arg forms)
+    entry = _MACROS[call.match.group(1).lower()]
+    if isinstance(entry, dict):
+        build = entry.get(len(call.args))
+    else:
+        build = entry[1] if entry[0] == len(call.args) else None
+    # a builder may decline (None) — e.g. when it sees its own
+    # re-trigger marker, keeping translate() idempotent
+    return None if build is None else build([a.strip() for a in call.args])
+
+
+def _expand_try(call: sql_lex.Call) -> str | None:
+    if len(call.args) != 1:
+        return None
+    inner = call.args[0].strip()
+    split = _split_top_binary(inner)
+    if split is None:
+        return f"({inner})"
+    lhs, op, rhs = split
+    return f"{dict(_TRY_OPS)[op]}({lhs}, {rhs})"
+
+
 def _expand_macros_and_try(sql: str) -> str:
-    changed = True
-    guard = 0
-    while changed and guard < 10:
-        changed = False
-        guard += 1
-        # macro calls
-        out = []
-        pos = 0
-        spans = _string_spans(sql)
-        while True:
-            m = _macro_call_re.search(sql, pos)
-            if m is None:
-                out.append(sql[pos:])
-                break
-            if _in_string(spans, m.start()):
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            parsed = _split_call(sql, m.end() - 1)
-            entry = _MACROS[m.group(1).lower()]
-            # (nargs, build) tuple, or {nargs: build} for overloaded
-            # arities (regexp_extract 2- and 3-arg forms)
-            if isinstance(entry, dict):
-                build = None if parsed is None else entry.get(
-                    len(parsed[0]))
-            else:
-                nargs, build = entry
-                if parsed is not None and len(parsed[0]) != nargs:
-                    build = None
-            expansion = None
-            if parsed is not None and build is not None:
-                # a builder may decline (None) — e.g. when it sees its
-                # own re-trigger marker, keeping translate() idempotent
-                expansion = build([a.strip() for a in parsed[0]])
-            if expansion is None:
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            args, close = parsed
-            out.append(sql[pos:m.start()])
-            out.append(expansion)
-            pos = close + 1
-            changed = True
-        sql = "".join(out)
-        # general TRY(expr)
-        out = []
-        pos = 0
-        spans = _string_spans(sql)
-        while True:
-            m = _try_call_re.search(sql, pos)
-            if m is None:
-                out.append(sql[pos:])
-                break
-            if _in_string(spans, m.start()):
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            parsed = _split_call(sql, m.end() - 1)
-            if parsed is None or len(parsed[0]) != 1:
-                out.append(sql[pos:m.end()])
-                pos = m.end()
-                continue
-            args, close = parsed
-            inner = args[0].strip()
-            split = _split_top_binary(inner)
-            out.append(sql[pos:m.start()])
-            if split is not None:
-                lhs, op, rhs = split
-                fn = dict(_TRY_OPS)[op]
-                out.append(f"{fn}({lhs}, {rhs})")
-            else:
-                out.append(f"({inner})")
-            pos = close + 1
-            changed = True
-        sql = "".join(out)
+    for _ in range(10):
+        before = sql
+        sql = sql_lex.rewrite_calls(sql, _macro_call_re, _expand_macro)
+        sql = sql_lex.rewrite_calls(sql, _try_call_re, _expand_try)
+        if sql == before:
+            break
     return sql
 
 
@@ -2365,66 +1914,24 @@ _groups_frame_re = re.compile(
 )
 
 
-def _matching_paren(sql: str, open_i: int, spans) -> int | None:
-    depth = 0
-    i = open_i
-    n = len(sql)
-    while i < n:
-        if _in_string(spans, i):
-            i += 1
-            continue
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return None
-
-
-def _depth0_keyword_spans(sql: str, word_pattern: str):
-    """(start, end) of each match of ``word_pattern`` at paren depth 0,
-    outside string literals."""
-    spans = _string_spans(sql)
-    depth = 0
-    depths = []
-    for i, c in enumerate(sql):
-        depths.append(depth)
-        if _in_string(spans, i):
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-    rx = re.compile(word_pattern, re.IGNORECASE)
-    return [
-        (m.start(), m.end())
-        for m in rx.finditer(sql)
-        if not _in_string(spans, m.start()) and depths[m.start()] == 0
-    ]
+_select_kw_re = re.compile(r"\bSELECT\b", re.IGNORECASE)
+_from_kw_re = re.compile(r"\bFROM\b", re.IGNORECASE)
+_grouped_kw_re = re.compile(r"\bGROUP\s+BY\b|\bHAVING\b", re.IGNORECASE)
+_query_tail_kw_re = re.compile(r"\bORDER\s+BY\b|\bLIMIT\b", re.IGNORECASE)
 
 
 def _rewrite_groups_frames(sql: str) -> str:
     if not _groups_kw_re.search(sql):
         return sql
-    spans = _string_spans(sql)
+    lx = sql_lex.Lexed(sql)
     sigs: dict[tuple[str, str], tuple[str, str, str]] = {}
     repls: list[tuple[int, int, str]] = []
     pos = 0
-    while True:
-        m = _over_open_re.search(sql, pos)
-        if m is None:
-            break
-        if _in_string(spans, m.start()):
-            pos = m.end()
-            continue
+    for m in lx.matches(_over_open_re):
         open_i = m.end() - 1
-        close_i = _matching_paren(sql, open_i, spans)
-        if close_i is None:
-            pos = m.end()
+        if m.start() < pos or open_i not in lx.close:
             continue
+        close_i = lx.close[open_i]
         content = sql[open_i + 1:close_i]
         pos = close_i
         gm = _groups_clause_re.match(content)
@@ -2449,24 +1956,18 @@ def _rewrite_groups_frames(sql: str) -> str:
         )
     if not repls:
         return sql
-    out = sql
-    for start, end, text in reversed(repls):
-        out = out[:start] + text + out[end:]
+    out = sql_lex.splice(sql, repls)
     # Wrap the single top-level SELECT's FROM with the dense_rank source.
-    selects = _depth0_keyword_spans(out, r"\bSELECT\b")
-    if len(selects) != 1:
+    lx = sql_lex.Lexed(out)
+    selects = list(lx.matches(_select_kw_re, within=-1))
+    if len(selects) != 1 or next(lx.matches(_grouped_kw_re, within=-1), None):
         return sql
-    froms = [s for s in _depth0_keyword_spans(out, r"\bFROM\b")
-             if s[0] > selects[0][1]]
-    if not froms:
+    from_ = next(lx.matches(_from_kw_re, selects[0].end(), within=-1), None)
+    if from_ is None:
         return sql
-    if _depth0_keyword_spans(out, r"\bGROUP\s+BY\b|\bHAVING\b"):
-        return sql
-    from_s, from_e = froms[0]
-    tails = [s for s in
-             _depth0_keyword_spans(out, r"\bORDER\s+BY\b|\bLIMIT\b")
-             if s[0] > from_e]
-    tail_at = tails[0][0] if tails else len(out)
+    from_s, from_e = from_.span()
+    tail = next(lx.matches(_query_tail_kw_re, from_e, within=-1), None)
+    tail_at = lx.code_end(from_e, len(out)) if tail is None else tail.start()
     body = out[from_e:tail_at].strip()
     dr_cols = ", ".join(
         f"dense_rank() OVER ("
@@ -2483,7 +1984,7 @@ def _rewrite_groups_frames(sql: str) -> str:
 
 def translate(sql: str) -> str:
     """Rewrite Presto spellings to Spark spellings.  Idempotent."""
-    out = _sub_skipping_strings(_unicode_str_re, _decode_unicode_literal, sql)
+    out = sql_lex.sub(_unicode_str_re, _decode_unicode_literal, sql)
     out = _rewrite_double_quoted_idents(out)
     out = _rewrite_quantified_comparisons(out)
     out = _rewrite_rankish_windows(out)
@@ -2491,10 +1992,10 @@ def translate(sql: str) -> str:
     out = _rewrite_order_by_null_defaults(out)
     out = _rewrite_array_literals(out)
     out = _rewrite_type_positions(out)
-    out = _sub_outside_strings(_bare_varchar_re, "AS STRING", out)
-    out = _sub_outside_strings(_bare_varbinary_re, "AS BINARY", out)
-    out = _sub_skipping_strings(_typed_literal_re, _typed_literal_repl, out)
-    out = _sub_outside_strings(_row_ctor_re, "struct(", out)
+    out = sql_lex.sub(_bare_varchar_re, "AS STRING", out)
+    out = sql_lex.sub(_bare_varbinary_re, "AS BINARY", out)
+    out = sql_lex.sub(_typed_literal_re, _typed_literal_repl, out)
+    out = sql_lex.sub(_row_ctor_re, "struct(", out)
     out = _rewrite_limit_grammar(out)
     out = _rewrite_at_time_zone(out)
     out = _rewrite_unnest(out)
@@ -2515,17 +2016,17 @@ def translate(sql: str) -> str:
     # Literal split delimiters quote BEFORE the regexp_split→split
     # rename below, so a renamed regexp_split's pattern is never quoted.
     out = _rewrite_calls(out, _split_call_name_re, _build_split)
-    out = _sub_outside_strings(
+    out = sql_lex.sub(
         _tablesample_re, lambda m: f"TABLESAMPLE ({m.group(1)} PERCENT)", out
     )
-    out = _rewrite_datetime_formats(out)
-    out = _rewrite_jsonpath_calls(out)
-    out = _sub_outside_strings(
+    out = sql_lex.rewrite_calls(out, _dt_call_re, _datetime_format_call)
+    out = sql_lex.rewrite_calls(out, _json_call_re, _jsonpath_call)
+    out = sql_lex.sub(
         _simple_renames_re,
         lambda m: _SIMPLE_MAP[m.group(1).lower()] + "(", out,
     )
-    out = _sub_outside_strings(_SUBSCRIPT_RULE[0], _SUBSCRIPT_RULE[1], out)
+    out = sql_lex.sub(*_SUBSCRIPT_RULE, out)
     out = _rewrite_paren_subscripts(out)
     for pat, repl in _PATTERN_RULES:
-        out = pat.sub(repl, out)  # type: ignore[arg-type]
+        out = sql_lex.sub(pat, repl, out)
     return _expand_macros_and_try(out)

@@ -33,6 +33,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from presto_spark import sql_lex
 from presto_spark.functions.dialect import BITWISE_UDFS
 
 
@@ -1067,8 +1068,9 @@ _CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 
 
 def _called(text: str) -> set[str]:
-    """Lower-cased names written as ``name(`` in SQL text."""
-    return {m.group(1).lower() for m in _CALL_RE.finditer(text)}
+    """Lower-cased names written as ``name(`` in the code of SQL text
+    (not in a literal, a quoted identifier or a comment)."""
+    return {m.group(1).lower() for m in sql_lex.Lexed(text).matches(_CALL_RE)}
 
 
 # name -> (Spark DDL arguments, return type, reference citation,

@@ -19,9 +19,10 @@ translates the whole text), DESCRIBE INPUT reports parameter positions
 output schema without running the query (Spark's lazy ``spark.sql``
 resolves the schema only).
 
-Parameter scanning is literal-aware: ``?`` inside single-quoted
-strings, double-quoted identifiers, or ``--`` comments is text, not a
-parameter — the same tokenization the reference parser gets from ANTLR.
+Parameter scanning reads the statement through presto_spark/sql_lex.py:
+``?`` inside a string literal, a quoted identifier or a comment is
+text, not a parameter — the same tokenization the reference parser
+gets from ANTLR.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import types as T
+
+from presto_spark import sql_lex
 
 PREPARE_RE = re.compile(
     r"^\s*PREPARE\s+([A-Za-z_]\w*)\s+FROM\s+(.+)$",
@@ -49,73 +52,20 @@ DESCRIBE_OUTPUT_RE = re.compile(
 )
 
 
+_PARAM_RE = re.compile(r"\?")
+
+
 def param_positions(stmt: str) -> list[int]:
-    """Character offsets of each positional ``?`` parameter (literal- and
-    comment-aware)."""
-    pos: list[int] = []
-    i, n = 0, len(stmt)
-    while i < n:
-        c = stmt[i]
-        if c == "'":
-            i += 1
-            while i < n:
-                if stmt[i] == "'":
-                    if i + 1 < n and stmt[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c == '"':
-            i += 1
-            while i < n and stmt[i] != '"':
-                i += 1
-        elif c == "-" and i + 1 < n and stmt[i + 1] == "-":
-            while i < n and stmt[i] != "\n":
-                i += 1
-            continue
-        elif c == "?":
-            pos.append(i)
-        i += 1
-    return pos
+    """Character offsets of each positional ``?`` parameter: a ``?``
+    in a literal, a quoted identifier or a comment is text."""
+    return [m.start() for m in sql_lex.Lexed(stmt).matches(_PARAM_RE)]
 
 
 def split_args(text: str) -> list[str]:
-    """Split a USING argument list on top-level commas (quotes and
-    parens respected) — each piece is one SQL expression."""
-    args: list[str] = []
-    depth = 0
-    buf: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            buf.append(c)
-            i += 1
-            while i < n:
-                buf.append(text[i])
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        buf.append(text[i + 1])
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif c in "([":
-            depth += 1
-            buf.append(c)
-        elif c in ")]":
-            depth -= 1
-            buf.append(c)
-        elif c == "," and depth == 0:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(c)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        args.append(tail)
-    return args
+    """Split a USING argument list on top-level commas — each piece is
+    one SQL expression."""
+    args = [a.strip() for a in sql_lex.Lexed(text).args(-1)]
+    return args[:-1] if not args[-1] else args
 
 
 def sentinel(i: int) -> str:

@@ -102,29 +102,12 @@ def _presto_spell(spark_ddl_type: str) -> str:
 
 
 def _sig_arg_types(args_ddl: str) -> str:
-    """'s STRING, sub STRING' → 'varchar, varchar'.
-
-    Splits on top-level commas only — ARRAY<...>/MAP<...> commas nest
-    inside angle brackets.
-    """
-    parts: list[str] = []
-    depth = 0
-    buf = ""
-    for c in args_ddl:
-        if c == "<":
-            depth += 1
-        elif c == ">":
-            depth -= 1
-        if c == "," and depth == 0:
-            parts.append(buf)
-            buf = ""
-        else:
-            buf += c
-    if buf.strip():
-        parts.append(buf)
-    return ", ".join(
-        _presto_spell(p.strip().split(None, 1)[1]) for p in parts if p.strip()
-    )
+    """'s STRING, sub STRING' → 'varchar, varchar', read by Spark's own
+    DDL parser, so the commas of ARRAY<...>/MAP<...> stay nested."""
+    if not args_ddl.strip():
+        return ""
+    return ", ".join(presto_type_name(f.dataType)
+                     for f in T._parse_datatype_string(args_ddl).fields)
 
 
 def show_functions(spark: SparkSession, like: str | None) -> DataFrame:

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from presto_spark.engine import Engine
+from presto_spark.prepared import split_args
 from presto_spark.session_properties import set_session_property
 from tests.conftest import SF_DIR
 
@@ -188,6 +189,23 @@ def test_prepare_param_in_string_literal_is_text(eng):
     eng.sql("PREPARE q_lit FROM SELECT 'a?b' AS s, ? AS x")
     rows = eng.sql("EXECUTE q_lit USING 7").collect()
     assert rows[0].s == "a?b" and rows[0].x == 7
+
+
+def test_prepare_param_in_comment_or_backtick_is_text(eng):
+    """A '?' in a block comment or a backtick identifier is text, not
+    a parameter (the statement used to expect 2 parameters)."""
+    eng.sql("PREPARE q_cmt FROM SELECT /* why? */ n_nationkey AS `a?` "
+            "FROM nation WHERE n_nationkey = ?")
+    rows = eng.sql("EXECUTE q_cmt USING 3").collect()
+    assert [r["a?"] for r in rows] == [3]
+
+
+def test_execute_quoted_identifier_argument_is_one(eng):
+    """A comma inside a quoted identifier does not split the USING
+    list."""
+    assert split_args('"x,y", 2') == ['"x,y"', "2"]
+    eng.sql('PREPARE q_qid FROM SELECT ? AS v FROM (SELECT 7 AS "x,y")')
+    assert eng.sql('EXECUTE q_qid USING "x,y"').collect()[0].v == 7
 
 
 def test_execute_adversarial_param_text(eng):

@@ -692,6 +692,9 @@ def test_dialect_at_time_zone():
         == "SELECT tswtz(date_trunc('hour', ts), zc) FROM t"
     s = "SELECT 'AT TIME ZONE' AS lit"
     assert translate(s) == s
+    # a bare literal operand: the keyword before it is no type word
+    assert translate("SELECT '2020-01-01 12:00:00' AT TIME ZONE 'UTC'") == \
+        "SELECT tswtz('2020-01-01 12:00:00', 'UTC')"
 
 
 def test_dialect_double_quoted_identifiers():
@@ -747,6 +750,45 @@ def test_dialect_default_nulls_last():
     out = translate(
         "SELECT a FROM t ORDER BY CASE WHEN a > 1 THEN 1 ELSE 2 END DESC")
     assert out.endswith("END DESC NULLS LAST")
+    # a comma inside an array literal does not end the sort item
+    out = translate("SELECT a FROM t ORDER BY ARRAY[a, b] DESC")
+    assert out.endswith("ORDER BY array(a, b) DESC NULLS LAST")
+
+
+def test_dialect_pattern_rules_skip_literals(spark):
+    """The argument-reshuffle rules rewrite code only: a literal that
+    spells a call comes back as written (it used to read
+    'bit_and_scalar(1, 2)' on Spark)."""
+    s = "SELECT 'bitwise_and(1, 2)' AS s, bitwise_and(6, 3) AS b"
+    assert translate(s) == (
+        "SELECT 'bitwise_and(1, 2)' AS s, bit_and_scalar(6, 3) AS b")
+    row = run_sql(spark, translate(s)).collect()[0]
+    assert row.s == "bitwise_and(1, 2)" and row.b == 2
+
+
+@pytest.mark.parametrize("comment", ["-- it's\n", "/* it's */"])
+def test_dialect_apostrophe_in_comment_hides_no_code(spark, comment):
+    """An apostrophe in a comment opens no literal, so the code after
+    the comment is still rewritten (approx_distinct used to reach
+    Spark as written and fail with UNRESOLVED_ROUTINE)."""
+    s = (f"SELECT 1 {comment}, approx_distinct(x) AS n, 'a' AS a "
+         "FROM VALUES (1), (2), (2) AS t(x)")
+    out = translate(s)
+    assert "approx_count_distinct(x, 0.023)" in out
+    row = run_sql(spark, out).collect()[0]
+    assert row.n == 2 and row.a == "a"
+
+
+def test_dialect_frame_found_after_paren_in_literal(spark):
+    """A ')' inside a literal does not move the window's nesting depth:
+    rank()'s frame is still found and stripped (Spark used to raise
+    'Window Frame ... must match the required frame')."""
+    s = ("SELECT rank() OVER (PARTITION BY a ORDER BY CASE WHEN b = ')' "
+         "THEN 1 END ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS r "
+         "FROM VALUES (1, ')'), (1, 'x') AS t(a, b)")
+    out = translate(s)
+    assert "ROWS" not in out
+    assert sorted(r.r for r in spark.sql(out).collect()) == [1, 2]
 
 
 def test_dialect_kurtosis_is_unbiased(spark):

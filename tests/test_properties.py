@@ -9,7 +9,7 @@ sane.
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from presto_spark.functions.dialect import translate
@@ -24,6 +24,56 @@ def test_translate_idempotent(sql):
     """Applying the dialect rewrite twice == once (documented contract)."""
     once = translate(sql)
     assert translate(once) == once
+
+
+# Text for the inside of a literal or a comment: dialect spellings mixed
+# with the characters that open or close lexical tokens.
+_FRAGMENTS = st.sampled_from([
+    "bitwise_and(1, 2)", "cardinality(x)", "ARRAY[1][1]", "ORDER BY a",
+    "TRY(1 / 0)", "x AT TIME ZONE 'UTC'", "it's", "'", '"', "`", "--",
+    "/*", "*/", "(", ")", "[", "]", ",", "?", " "])
+_LEXICAL_TEXT = st.lists(_FRAGMENTS | st.text(max_size=8), max_size=12).map(
+    "".join)
+
+
+@given(_LEXICAL_TEXT)
+@example("bitwise_and(1, 2)")
+@settings(max_examples=300, deadline=None)
+def test_translate_keeps_string_literals(s):
+    """A Presto-escaped string literal is never rewritten."""
+    sql = "SELECT '" + s.replace("'", "''") + "' AS x"
+    assert translate(sql) == sql
+
+
+_DIALECT_QUERIES = [
+    "SELECT a FROM t ORDER BY a",
+    "SELECT a FROM t ORDER BY a DESC LIMIT 3",
+    "SELECT cardinality(ARRAY[1, 2]), ARRAY[10, 20][1] FROM t",
+    "SELECT approx_distinct(x), bitwise_and(a, b) FROM t GROUP BY g",
+    "SELECT rank() OVER (PARTITION BY a ORDER BY b "
+    "ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) FROM t",
+    "SELECT sum(x) OVER (ORDER BY y "
+    "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) FROM t",
+    "SELECT TRY(a / b), date_format(ts, '%Y-%m-%d') FROM t "
+    "WHERE x = ANY (SELECT y FROM u)",
+    "SELECT x FROM t WHERE ts AT TIME ZONE 'UTC' IS NOT NULL",
+    "SELECT * FROM t CROSS JOIN UNNEST(arr) AS u(x)",
+    "SELECT * FROM t OFFSET 2 ROWS FETCH FIRST 3 ROWS ONLY",
+    "SELECT a FROM t WHERE c IN (VALUES 1, 2)",
+    'SELECT "sum"("x") "y" FROM t',
+    "SELECT CAST(x AS MAP(VARCHAR, ARRAY(BIGINT))), DECIMAL '1.5' FROM t",
+    "SELECT array_agg(x) FILTER (WHERE x > 0), strpos(s, 'a', 2) FROM t",
+    "SELECT x > ALL (SELECT y FROM u) FROM t",
+]
+
+
+@given(st.sampled_from(_DIALECT_QUERIES),
+       _LEXICAL_TEXT.map(lambda c: c.replace("\r", "").replace("\n", "")))
+@example(_DIALECT_QUERIES[0], "it's bitwise_and(1, 2)")
+@settings(max_examples=300, deadline=None)
+def test_translate_ignores_trailing_comment(q, c):
+    """A comment is not code: appending one changes nothing else."""
+    assert translate(q + "\n-- " + c) == translate(q) + "\n-- " + c
 
 
 @given(IDENT)

@@ -43,6 +43,14 @@ def test_text_without_shims_registers_nothing(spark):
     assert _catalog_shims(s) == set()
 
 
+def test_names_in_literals_and_comments_register_nothing(spark):
+    """Only a name(...) in code calls a shim: one in a literal or a
+    comment used to register color and its __hsb_* helpers."""
+    s = spark.newSession()
+    assert register_functions(s, "SELECT 'color(1)' AS c -- bar(") == []
+    assert _catalog_shims(s) == set()
+
+
 def test_dependencies_register_first(spark):
     s = spark.newSession()
     got = register_functions(
