@@ -115,7 +115,7 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
     Types, Function Type, Deterministic, Description
     (ShowQueriesRewrite.java; registry spec
     BuiltInTypeAndFunctionNamespaceManager.java:525)."""
-    from presto_spark.functions.dialect import _SIMPLE_MAP
+    from presto_spark.functions.dialect import _CALLS
 
     rows: list[tuple[str, str, str, str, bool, str]] = []
     seen: set[str] = set()
@@ -134,8 +134,9 @@ def show_functions(spark: SparkSession, like: str | None) -> DataFrame:
         if not (name.startswith("__") or name.endswith("_py")):
             add(name, _presto_spell(s.ret), _sig_arg_types(s.args),
                 "scalar", s.cite)
-    for name, target in _SIMPLE_MAP.items():
-        add(name, "", "", "scalar", f"dialect rename -> {target}")
+    for name, target in _CALLS.items():
+        if isinstance(target, str):
+            add(name, "", "", "scalar", f"dialect rename -> {target}")
     for name, (args, ret, desc) in _DIALECT_SPELLINGS.items():
         add(name, ret, args, "scalar", desc)
     # Spark builtins round out the callable surface; the catalog exposes

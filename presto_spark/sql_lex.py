@@ -42,7 +42,7 @@ _PAIR = {")": "(", "]": "["}
 class Call(NamedTuple):
     """One call site ``name(...)`` in code: the name match (ending in
     the open parenthesis), the index of the close and the arguments
-    split at top-level commas (raw text, surrounding space kept)."""
+    split at top-level commas (surrounding space kept)."""
 
     match: re.Match
     close: int
@@ -50,8 +50,8 @@ class Call(NamedTuple):
 
     @property
     def text(self) -> str:
-        """The whole call as written."""
-        return self.match.string[self.match.start():self.close + 1]
+        """The whole call, spelled with ``args``."""
+        return self.match.group(0) + ",".join(self.args) + ")"
 
 
 class Lexed:
@@ -169,16 +169,30 @@ def sub(pat: re.Pattern, repl: str | Callable[[re.Match], str],
 
 def rewrite_calls(text: str, name_re: re.Pattern,
                   build: Callable[[Call], str | None]) -> str:
-    """Replace each call site of ``name_re`` with ``build(call)``.  A
-    None leaves the call as written and its nested calls are still
-    visited; the calls nested in a replaced call are not."""
-    edits: list[tuple[int, int, str]] = []
-    pos = 0
-    for call in Lexed(text).calls(name_re):
-        if call.match.start() < pos:
-            continue
-        repl = build(call)
-        if repl is not None:
-            edits.append((call.match.start(), call.close + 1, repl))
-            pos = call.close + 1
-    return splice(text, edits)
+    """Replace each call site of ``name_re`` with ``build(call)``, inner
+    calls first: ``call.args`` are the arguments with the calls nested
+    in them already rewritten.  A None keeps the call, spelled with
+    those arguments.  What ``build`` returns is never scanned again."""
+    lx = Lexed(text)
+    sites = [(m, lx.close[m.end() - 1]) for m in lx.matches(name_re)
+             if m.end() - 1 in lx.close]
+    k = 0
+
+    def walk(lo: int, hi: int) -> str:
+        # text[lo:hi] with every call site in it rewritten; the sites
+        # are in text order and nest like their brackets
+        nonlocal k
+        out, pos = [], lo
+        while k < len(sites) and sites[k][0].start() < hi:
+            m, close = sites[k]
+            k += 1
+            bounds = [m.end() - 1, *lx.commas[m.end() - 1], close]
+            call = Call(m, close, [walk(a + 1, b)
+                                   for a, b in zip(bounds, bounds[1:])])
+            repl = build(call)
+            out += (text[pos:m.start()], call.text if repl is None else repl)
+            pos = close + 1
+        out.append(text[pos:hi])
+        return "".join(out)
+
+    return walk(0, len(text))

@@ -52,3 +52,25 @@ def test_new_session_carries_engine_conf(spark):
     s = spark.newSession()
     for k, v in ENGINE_CONF.items():
         assert s.conf.get(k) == v, k
+
+
+def test_driver_memory_is_sized_from_the_host(tmp_path, monkeypatch):
+    """The driver heap default is 3/8 of MemTotal, floored at 1g and
+    capped at 48g; 48g when MemTotal cannot be read."""
+    from presto_spark import session
+
+    meminfo = tmp_path / "meminfo"
+    monkeypatch.setattr(session, "_MEMINFO", str(meminfo))
+
+    def sized(mem_total_kib: int) -> str:
+        meminfo.write_text(f"MemTotal:       {mem_total_kib} kB\n"
+                           "MemFree:        1024 kB\n")
+        return session._driver_memory()
+
+    assert sized(16 * 1024 * 1024) == "6144m"
+    assert sized(1024 * 1024) == "1024m"
+    assert sized(1024 * 1024 * 1024) == "49152m"
+    meminfo.write_text("MemFree:        1024 kB\n")
+    assert session._driver_memory() == "48g"
+    meminfo.unlink()
+    assert session._driver_memory() == "48g"

@@ -753,6 +753,50 @@ def test_dialect_default_nulls_last():
     # a comma inside an array literal does not end the sort item
     out = translate("SELECT a FROM t ORDER BY ARRAY[a, b] DESC")
     assert out.endswith("ORDER BY array(a, b) DESC NULLS LAST")
+    # an ORDER BY nested in a sort item gets its own NULLS LAST, at
+    # every bracket level
+    out = translate("SELECT a FROM t ORDER BY sum(x) OVER (ORDER BY y)")
+    assert out == ("SELECT a FROM t ORDER BY sum(x) OVER "
+                   "(ORDER BY y NULLS LAST) NULLS LAST")
+    out = translate(
+        "SELECT a FROM t ORDER BY (SELECT max(b) FROM u ORDER BY c), a")
+    assert out == ("SELECT a FROM t ORDER BY (SELECT max(b) FROM u "
+                   "ORDER BY c NULLS LAST) NULLS LAST, a NULLS LAST")
+
+
+def test_dialect_no_match_predicates_keep_precedence(spark):
+    """no_keys_match / no_values_match negate a parenthesised exists,
+    so a following IS NULL tests the whole predicate (a bare
+    NOT exists(...) IS NULL parses as NOT (exists(...) IS NULL))."""
+    out = translate(
+        "SELECT no_keys_match(m, k -> k > 1) IS NULL AS nk, "
+        "no_values_match(m, v -> v > 1) IS NULL AS nv "
+        "FROM VALUES (CAST(NULL AS MAP<INT, INT>)), "
+        "(map_from_arrays(array(1), array(2))) AS t(m)")
+    rows = run_sql(spark, out).collect()
+    assert [(r.nk, r.nv) for r in rows] == [(True, True), (False, False)]
+
+
+def test_dialect_datetime_call_nested_in_datetime_call(spark):
+    """The inner date_parse is rewritten too (the outer date_format
+    used to hand its arguments back as written, and date_parse is no
+    Spark function)."""
+    out = translate(
+        "SELECT date_format(date_parse(s, '%Y-%m-%d'), '%Y') AS y "
+        "FROM VALUES ('2021-03-04') AS t(s)")
+    assert "date_parse" not in out
+    assert run_sql(spark, out).collect()[0].y == "2021"
+
+
+def test_dialect_json_call_nested_in_json_call(spark):
+    """An extended path on the inner json_extract routes to the Python
+    JSONPath tier even inside another json_extract (it used to stay
+    on get_json_object, which cannot read '$..a')."""
+    out = translate(
+        "SELECT json_extract(json_extract(j, '$..a'), '$[0].b') AS b "
+        "FROM VALUES ('{\"x\": {\"a\": {\"b\": 1}}}') AS t(j)")
+    assert "json_extract(j, '$..a')" not in out
+    assert run_sql(spark, out).collect()[0].b == "1"
 
 
 def test_dialect_pattern_rules_skip_literals(spark):

@@ -76,21 +76,46 @@ def test_translate_ignores_trailing_comment(q, c):
     assert translate(q + "\n-- " + c) == translate(q) + "\n-- " + c
 
 
+# Presto-only spellings, and call-table entries to nest them in: the
+# datetime and JSON entries, an aggregate expansion and macros.
+_PRESTO_ONLY = st.sampled_from([
+    "date_parse(s, '%Y-%m-%d')", "cardinality(a)", "bitwise_and(x, 3)",
+    "approx_distinct(x)", "regexp_split(s, ',')", "parse_datetime(s, 'YYYY')",
+    "json_extract(j, '$..a')", "ngrams(a, 2)", "TRY(x / y)"])
+_OUTER_CALLS = st.sampled_from([
+    "date_format({}, '%Y')", "format_datetime({}, 'YYYY-MM')",
+    "json_extract({}, '$.b')", "json_size({}, '$[*]')", "kurtosis({})",
+    "remove_nulls({})", "array_top_n({}, 2)", "typeof({})",
+    "approx_percentile({}, 0.5)", "features({})", "substr({}, n)",
+    "no_keys_match({}, k -> k > 1)"])
+
+
+@given(_PRESTO_ONLY, st.lists(_OUTER_CALLS, min_size=1, max_size=3))
+@example("date_parse(s, '%Y-%m-%d')", ["date_format({}, '%Y')"])
+@example("json_extract(j, '$..a')", ["json_extract({}, '$.b')"])
+@settings(max_examples=300, deadline=None)
+def test_translate_rewrites_calls_nested_in_table_entries(inner, outers):
+    """A Presto-only spelling nested in the arguments of other call
+    table entries never survives translate, and the result is a fixed
+    point."""
+    expr = inner
+    for outer in outers:
+        expr = outer.format(expr)
+    once = translate(f"SELECT {expr} FROM t")
+    assert inner not in once
+    assert translate(once) == once
+
+
 @given(IDENT)
 @settings(max_examples=100, deadline=None)
 def test_translate_leaves_unknown_functions_alone(name):
     """Only the mapped spellings are rewritten.  The exemption set
-    derives from the live rename/macro tables (a hardcoded list
-    missed 1-arg macro names like normalize — only low generation
-    probability kept it green)."""
+    derives from the live call table (a hardcoded list missed 1-arg
+    macro names like normalize — only low generation probability kept
+    it green)."""
     from presto_spark.functions import dialect as _d
 
-    exempt = (set(_d._SIMPLE_MAP) | set(_d._MACROS)
-              | {"approx_distinct", "approx_percentile", "try",
-                 "kurtosis", "count", "grouping", "split", "color",
-                 "render", "bar", "features", "min_by", "max_by",
-                 "min", "max", "array_min_by", "array_max_by",
-                 "array_agg"})
+    exempt = set(_d._CALLS) | {"array_agg"}
     if name in exempt:
         return
     sql = f"SELECT {name}(x) FROM t"

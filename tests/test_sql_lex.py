@@ -51,14 +51,18 @@ def test_matches_start_in_code():
                                           within=-1)] == [7]
 
 
-def test_rewrite_calls_skips_calls_nested_in_a_replaced_call():
+def test_rewrite_calls_rewrites_inner_calls_first():
     name_re = re.compile(r"\b(f)\s*\(")
     assert sql_lex.rewrite_calls(
         "f(f(1)), 'f(2)'", name_re,
-        lambda c: f"g[{c.args[0]}]") == "g[f(1)], 'f(2)'"
+        lambda c: f"g[{c.args[0]}]") == "g[g[1]], 'f(2)'"
+    # None keeps the call, spelled with its rewritten arguments
     assert sql_lex.rewrite_calls(
-        "f(f(1))", name_re,
-        lambda c: None if "(" in c.args[0] else "one") == "f(one)"
+        "f(f(1), 2 )", name_re,
+        lambda c: None if len(c.args) == 2 else "one") == "f(one, 2 )"
+    # a builder's output is never scanned again
+    assert sql_lex.rewrite_calls(
+        "f(1)", name_re, lambda c: "f(f(2))") == "f(f(2))"
 
 
 def test_code_end_skips_trailing_comments_only():
